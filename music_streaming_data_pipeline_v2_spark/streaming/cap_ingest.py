@@ -29,11 +29,11 @@ Equivalence contract: after draining any sequence of waves,
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import Rows, drain, read_state
 
 DOC_SCHEMA = T.StructType(
     [
@@ -43,7 +43,8 @@ DOC_SCHEMA = T.StructType(
     ]
 )
 
-_STATE_SCHEMA = "g string, doc_id long, _h string"
+CELLS = Rows("cells", "g string, doc_id long, _h string")
+SPEC = (CELLS,)
 
 _SALT = "c|"
 
@@ -64,19 +65,8 @@ def run_incremental_cap(
     """Drain ``input_path`` (JSON-lines doc files) into the candidate
     state under ``work_dir`` (cells/, ckpt/). Each batch contributes
     at most ``cap`` rows per group it touches."""
-    cells_dir = os.path.join(work_dir, "cells")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
 
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        w = Window.partitionBy(group_col).orderBy("_h", id_col)
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
         cand = (
             batch_df.select(
                 F.col(group_col).alias("g"),
@@ -97,19 +87,9 @@ def run_incremental_cap(
             .filter(F.col("_rn") <= int(cap))
             .drop("_rn")
         )
-        # batch_id-partitioned overwrite: replays rewrite their own
-        # partition byte-identically (idempotent commit discipline)
-        cand.write.mode("overwrite").parquet(
-            os.path.join(cells_dir, f"batch_id={batch_id}")
-        )
+        commit("cells", cand)
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_path, work_dir, schema or DOC_SCHEMA, batch_fn)
 
 
 def query_capped(
@@ -123,11 +103,7 @@ def query_capped(
     Plan: the window runs over the state (≤ batches × groups × cap
     rows after the (g, doc_id) dedup), never over documents; nothing
     re-reads raw text."""
-    from .state import read_state_or_empty
-
-    state = read_state_or_empty(
-        spark, os.path.join(work_dir, "cells"), _STATE_SCHEMA
-    )
+    state = read_state(spark, work_dir, CELLS)
     w = Window.partitionBy("g").orderBy("_h", "doc_id")
     return (
         state.dropDuplicates(["g", "doc_id"])

@@ -21,8 +21,7 @@ State under ``work_dir``:
 - ``hits/`` — per-batch contamination rows ``(doc_id,
   n_shared_grams, n_test_docs_hit)`` for flagged arrivals only
   (clean docs absent, the batch operator's roster convention),
-  partitioned by ``batch_id`` with overwrite-own-partition replay
-  idempotency (the dedup_ingest contract).
+  one ``batch_id=`` partition per batch (streaming/drain.py).
 
 Equivalence (pinned by tests/test_decontam_ingest.py):
 ``query_contamination`` over everything drained ≡
@@ -42,6 +41,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .drain import Rows, drain, read_state
+from .state import path_exists, pin_params
+
 DOC_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -49,6 +51,15 @@ DOC_SCHEMA = T.StructType(
         T.StructField("source", T.StringType()),
     ]
 )
+
+
+HITS = Rows("hits", "doc_id long, n_shared_grams long, n_test_docs_hit long")
+CLEANED = Rows(
+    "cleaned",
+    "doc_id long, segment_id string, seg_index long, "
+    "n_tokens long, text string",
+)
+SPEC = (HITS, CLEANED)
 
 
 def init_decontam_state(
@@ -74,25 +85,23 @@ def init_decontam_state(
     from ..operators.text import word_ngram_postings
 
     tg_dir = os.path.join(work_dir, "testgrams")
-    if os.path.isdir(tg_dir):
+    if path_exists(spark, tg_dir):
         raise ValueError(
             f"decontam state at {work_dir} already initialized; screened "
             "batches are only comparable against ONE pinned eval gram set "
             "— use a fresh work_dir for a new eval set"
         )
-    import json
-
-    os.makedirs(work_dir, exist_ok=True)
-    with open(os.path.join(work_dir, "state_meta.json"), "w") as fh:
-        json.dump(
-            {
-                "format": 2,
-                "n": int(n),
-                "margin": int(margin),
-                "min_segment_tokens": int(min_segment_tokens),
-            },
-            fh,
-        )
+    pin_params(
+        spark,
+        os.path.join(work_dir, "state_meta.json"),
+        {
+            "format": 2,
+            "n": int(n),
+            "margin": int(margin),
+            "min_segment_tokens": int(min_segment_tokens),
+        },
+        replace=True,
+    )
     word_ngram_postings(
         test_docs, n, text_col=text_col, id_col=id_col, out_id="test_id"
     ).write.mode("error").parquet(tg_dir)
@@ -122,34 +131,19 @@ def run_incremental_decontam(
     additivity argument as the hit rows), so the drained cleaned
     corpus is EXACTLY the batch operator over the concatenation of
     all drained waves (pinned by tests/test_decontam_ingest.py)."""
-    import json
-
-    meta_path = os.path.join(work_dir, "state_meta.json")
-    if not os.path.exists(meta_path):
+    meta = pin_params(spark, os.path.join(work_dir, "state_meta.json"), None)
+    if meta is None:
         raise ValueError(
             f"no decontam state at {work_dir}: run init_decontam_state first"
         )
-    with open(meta_path) as fh:
-        meta = json.load(fh)
     n = int(meta["n"])
     margin = int(meta.get("margin", 0))
     floor = int(meta.get("min_segment_tokens", 1))
     tg_dir = os.path.join(work_dir, "testgrams")
-    hits_dir = os.path.join(work_dir, "hits")
-    cleaned_dir = os.path.join(work_dir, "cleaned")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
 
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
         from ..operators.text import word_ngram_postings
 
-        if batch_df.isEmpty():
-            return
         if emit_cleaned:
             # cleaned mode screens AND excises the same batch: share
             # ONE tokenize+explode shuffle between the two via a
@@ -182,9 +176,7 @@ def run_incremental_decontam(
                 F.countDistinct("test_id").alias("n_test_docs_hit"),
             )
         )
-        hits.write.mode("overwrite").parquet(
-            os.path.join(hits_dir, f"batch_id={batch_id}")
-        )
+        commit("hits", hits)
         if emit_cleaned:
             from ..operators.text import remove_contaminated_spans
 
@@ -199,17 +191,9 @@ def run_incremental_decontam(
                 eval_grams=testgrams,
                 positions=pos,
             )
-            cleaned.write.mode("overwrite").parquet(
-                os.path.join(cleaned_dir, f"batch_id={batch_id}")
-            )
+            commit("cleaned", cleaned)
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_path, work_dir, schema or DOC_SCHEMA, batch_fn)
 
 
 def query_cleaned_corpus(spark: SparkSession, work_dir: str) -> DataFrame:
@@ -219,24 +203,11 @@ def query_cleaned_corpus(spark: SparkSession, work_dir: str) -> DataFrame:
     recomputation: excision is batch-local against the pinned gram
     postings, so the union over waves ≡ the batch operator over the
     concatenated corpus."""
-    from .state import read_state_or_empty
-
-    return read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "cleaned"),
-        "doc_id long, segment_id string, seg_index long, "
-        "n_tokens long, text string",
-    )
+    return read_state(spark, work_dir, CLEANED)
 
 
 def query_contamination(spark: SparkSession, work_dir: str) -> DataFrame:
     """All flagged arrivals so far: ``(doc_id, n_shared_grams,
     n_test_docs_hit)`` — the union of per-batch screening rows, exact
     with zero recomputation (no cross-batch interaction exists)."""
-    from .state import read_state_or_empty
-
-    return read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "hits"),
-        "doc_id long, n_shared_grams long, n_test_docs_hit long",
-    )
+    return read_state(spark, work_dir, HITS)

@@ -28,15 +28,10 @@ instead of scanning every state file. ``max_bucket`` caps boilerplate
 buckets exactly as in the batch operator (same observability argument
 — see minhash_lsh_pairs).
 
-Delivery semantics: ``foreachBatch`` is **at-least-once** — a crash
-after a state write but before checkpoint commit replays the batch.
-All three state relations are therefore partitioned by ``batch_id``
-and each batch OVERWRITES exactly its own partition, so a replay
-rewrites identical content instead of appending duplicates (which
-would otherwise inflate bucket widths toward the ``max_bucket`` cap
-and re-emit verified pairs). Reads of prior state filter
-``batch_id < current`` — partition-pruned, and immune to leftovers
-from a crashed attempt at the current batch.
+A replay that appended instead of overwriting its partition would
+inflate bucket widths toward the ``max_bucket`` cap and re-emit
+verified pairs — the drain kernel's overwrite-own-partition commit
+(streaming/drain.py) is what rules that out.
 """
 
 from __future__ import annotations
@@ -47,6 +42,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .drain import Labels, Rows, drain, read_state
+from .state import (
+    latest_batch_id,
+    path_exists,
+    pin_params,
+    read_resolved_labels,
+    read_state_or_empty,
+)
+
 DOC_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -54,6 +58,14 @@ DOC_SCHEMA = T.StructType(
         T.StructField("text", T.StringType()),
     ]
 )
+
+DOCS = Rows(
+    "docs", "doc_id long, lang string, text string, shingles array<bigint>"
+)
+INDEX = Rows("index", "doc_id long, band_id int, band_hash long")
+PAIRS = Rows("pairs", "id_a long, id_b long, jaccard double")
+COMPS = Labels("comps", "id long, component long")
+SPEC = (DOCS, INDEX, PAIRS, COMPS)
 
 
 def run_incremental_dedup(
@@ -67,13 +79,14 @@ def run_incremental_dedup(
     max_bucket: int = 1000,
     schema: T.StructType | None = None,
     maintain_components: bool = True,
-    prune_after_drain: bool = False,
 ) -> None:
     """Drain ``input_path`` (CSV doc files) through the incremental
     near-dup index under ``work_dir`` (docs/, index/, pairs/, comps/,
     ckpt/ — comps/ is the per-batch component-labeling DELTA state
     the curation serving path resolves instead of re-clustering
-    history; each drain writes only the label rows it changed).
+    history; each drain writes only the label rows it changed, and
+    ``compact(spark, work_dir, SPEC)`` folds that chain between
+    drains).
 
     ``maintain_components=False`` skips the labeling maintenance —
     for pipelines that only consume the PAIR list (dedup-audit
@@ -83,22 +96,8 @@ def run_incremental_dedup(
     query_curation) fall back to full CC over the pairs when comps/
     is absent or lagging — correct, just not O(new-pairs) per query;
     the next MAINTAINED drain detects the lag and self-heals with one
-    bootstrap clustering (ADVICE r7).
-
-    ``prune_after_drain=True`` compacts the comps/ delta chain after
-    the stream terminates (state.compact_label_deltas: fold into the
-    newest partition, delete the rest) — safe exactly then, because a
-    cleanly terminated availableNow stream has committed its
-    checkpoint, so no folded batch can replay. Default off: the
-    maintenance cadence is a deployment decision (a daily compaction
-    job vs per-drain)."""
+    bootstrap clustering (ADVICE r7)."""
     from ..operators.dedup import hashed_word_shingles, minhash_band_postings
-
-    docs_dir = os.path.join(work_dir, "docs")
-    index_dir = os.path.join(work_dir, "index")
-    pairs_dir = os.path.join(work_dir, "pairs")
-    comps_dir = os.path.join(work_dir, "comps")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
 
     # State compatibility guard: postings and sketches are only
     # comparable across runs when the hash parameters match, and the
@@ -114,54 +113,31 @@ def run_incremental_dedup(
         "bands": bands,
         "shingle_k": shingle_k,
     }
-    meta_path = os.path.join(work_dir, "state_meta.json")
-    has_state = os.path.isdir(docs_dir) or os.path.isdir(index_dir)
-    if os.path.exists(meta_path):
-        import json
-
-        with open(meta_path) as fh:
-            found = json.load(fh)
-        if found != _meta:
-            raise ValueError(
-                f"incompatible dedup-index state at {work_dir}: state was "
-                f"built with {found}, run requested {_meta}; use a fresh "
-                "work_dir (or rebuild) — mixed-parameter postings would "
-                "silently miss duplicates"
-            )
-    elif has_state:
+    has_state = any(
+        path_exists(spark, os.path.join(work_dir, s.name))
+        for s in (DOCS, INDEX)
+    )
+    found = pin_params(
+        spark,
+        os.path.join(work_dir, "state_meta.json"),
+        None if has_state else _meta,
+    )
+    if found is not None and found != _meta:
+        raise ValueError(
+            f"incompatible dedup-index state at {work_dir}: state was "
+            f"built with {found}, run requested {_meta}; use a fresh "
+            "work_dir (or rebuild) — mixed-parameter postings would "
+            "silently miss duplicates"
+        )
+    if found is None and has_state:
         raise ValueError(
             f"dedup-index state at {work_dir} predates the sketch-bearing "
             "format and cannot be resumed; rebuild into a fresh work_dir"
         )
-    else:
-        import json
+    pairs_dir = os.path.join(work_dir, "pairs")
+    comps_dir = os.path.join(work_dir, "comps")
 
-        os.makedirs(work_dir, exist_ok=True)
-        with open(meta_path, "w") as fh:
-            json.dump(_meta, fh)
-
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .option("header", "true")
-        .format("csv")
-        .load(input_path)
-    )
-
-    def read_state(state_dir: str, schema, before_batch: int) -> DataFrame:
-        """Prior-batch state only: partition-pruned ``batch_id <`` read
-        that also excludes any partial partition a crashed attempt at
-        the CURRENT batch may have left behind. Schema is declared
-        explicitly and an absent path is the empty relation — the
-        shared state-reader contract."""
-        from .state import read_state_or_empty
-
-        return read_state_or_empty(spark, state_dir, schema, before_batch)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # emptiness probed on the RAW batch (one row of one file) —
-        # probing the shingled frame paid a whole partition of sketch
-        # work just to learn there is nothing to do.
-        #
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
         # NOT rebalanced (r5 probe): repartitioning the batch to
         # defaultParallelism before sketching sped the CPU phases in
         # isolation (3.5× on postings at sf0.1/local[32]) but made the
@@ -171,8 +147,6 @@ def run_incremental_dedup(
         # files at spark.sql.files.maxPartitionBytes, so micro-batch
         # parallelism tracks BYTES, not file count — a thin batch is a
         # small batch, and small batches don't need 32 cores.
-        if batch_df.isEmpty():
-            return
         # shingle the batch ONCE; postings and verification both read
         # the persisted sketch, and it is written to the doc store so
         # no later batch ever re-tokenizes this one
@@ -186,9 +160,7 @@ def run_incremental_dedup(
             shingles_col="shingles",
         ).persist()
 
-        old_post = read_state(
-            index_dir, "doc_id long, band_id int, band_hash long", batch_id
-        )
+        old_post = read_state(spark, work_dir, INDEX, batch_id)
         all_post = old_post.unionByName(new_post)
         # cap pathological buckets by CURRENT total bucket width
         bucket_ok = (
@@ -214,7 +186,9 @@ def run_incremental_dedup(
             .distinct()
         )
 
-        old_docs = read_state(docs_dir, batch.schema, batch_id)
+        old_docs = read_state_or_empty(
+            spark, os.path.join(work_dir, "docs"), batch.schema, batch_id
+        )
         texts = old_docs.unionByName(batch).select(
             F.col("doc_id").alias("_id"), F.col("shingles").alias("_sh")
         )
@@ -234,14 +208,9 @@ def run_incremental_dedup(
             .filter(F.col("jaccard") >= jaccard_threshold)
             .select("id_a", "id_b", "jaccard")
         )
-        # idempotent commit: each batch owns the `batch_id=N` partition
-        # of every state relation and overwrites it wholesale, so an
-        # at-least-once replay rewrites the same content (batch_id is
-        # carried by the partition directory, not a data column)
-        part = f"batch_id={batch_id}"
-        verified.write.mode("overwrite").parquet(os.path.join(pairs_dir, part))
-        new_post.write.mode("overwrite").parquet(os.path.join(index_dir, part))
-        batch.write.mode("overwrite").parquet(os.path.join(docs_dir, part))
+        pairs_part = commit("pairs", verified)
+        commit("index", new_post)
+        commit("docs", batch)
         new_post.unpersist()
         batch.unpersist()
 
@@ -271,18 +240,14 @@ def run_incremental_dedup(
         # replay-deterministic, so the overwrite commits identical
         # content.
         from ..operators.clustering import connected_components
-        from .state import latest_batch_id, read_resolved_labels
 
         delta = (
-            spark.read.schema("id_a long, id_b long, jaccard double")
-            .parquet(os.path.join(pairs_dir, part))
+            spark.read.schema(PAIRS.schema)
+            .parquet(pairs_part)
             .select("id_a", "id_b")
         )
         prev = read_resolved_labels(
-            spark,
-            comps_dir,
-            "id long, component long",
-            before_batch=batch_id,
+            spark, comps_dir, COMPS.schema, before_batch=batch_id
         )
         # ADVICE r7 (high): a maintenance-DISABLED drain between
         # maintained ones leaves comps/ lagging pairs/. Folding only
@@ -305,20 +270,14 @@ def run_incremental_dedup(
             # so far (prior partitions + this batch); written as a
             # FULL labeling, so resolution never reaches past it
             all_pairs = (
-                read_state(
-                    pairs_dir,
-                    "id_a long, id_b long, jaccard double",
-                    batch_id,
-                )
+                read_state(spark, work_dir, PAIRS, batch_id)
                 .select("id_a", "id_b")
                 .unionByName(delta)
             )
             snapshot = connected_components(
                 all_pairs, src="id_a", dst="id_b"
             ).select("id", "component")
-            snapshot.write.mode("overwrite").parquet(
-                os.path.join(comps_dir, part)
-            )
+            commit("comps", snapshot)
         elif not delta.isEmpty():
             # The resolved labeling (a max_by aggregate over the whole
             # comps chain) feeds FOUR subtrees below — the two
@@ -368,9 +327,7 @@ def run_incremental_dedup(
                 .join(cc, "id")
                 .select("id", "component")
             )
-            changed.unionByName(new_rows).write.mode("overwrite").parquet(
-                os.path.join(comps_dir, part)
-            )
+            commit("comps", changed.unionByName(new_rows))
         else:
             # no new pairs: labels unchanged; commit an EMPTY delta
             # partition so `comps latest batch == pairs latest batch`
@@ -378,24 +335,14 @@ def run_incremental_dedup(
             # the serving freshness probe and the lag probe above both
             # rely on. Cost: one metadata-only write, NOT a labeling
             # copy (the old copy-forward was ∝ labeling size).
-            spark.createDataFrame(
-                [], "id long, component long"
-            ).write.mode("overwrite").parquet(os.path.join(comps_dir, part))
+            commit("comps", spark.createDataFrame([], COMPS.schema))
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        spark,
+        input_path,
+        work_dir,
+        schema or DOC_SCHEMA,
+        batch_fn,
+        fmt="csv",
+        reader_options={"header": "true"},
     )
-
-    if prune_after_drain and maintain_components:
-        from .state import compact_label_deltas
-
-        compact_label_deltas(
-            spark,
-            comps_dir,
-            "id long, component long",
-            ckpt_dir=ckpt_dir,
-        )

@@ -20,11 +20,6 @@ and the statistics are always exactly consistent with the state). The
 target corpus is a fixture, not a stream — its distribution is
 computed per query call.
 
-Delivery semantics: ``foreachBatch`` is at-least-once — the state is
-partitioned by ``batch_id`` and each batch OVERWRITES its own
-partition, so a replay rewrites identical content (dedup_ingest's
-contract).
-
 Equivalence contract: after draining any sequence of waves,
 ``query_dsir_scores`` over the accumulated state returns EXACTLY what
 ``dsir_importance`` returns over the concatenation of all drained
@@ -36,11 +31,11 @@ thereby inherits dsir_importance's DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import Cells, drain, read_state
 
 DOC_SCHEMA = T.StructType(
     [
@@ -52,63 +47,39 @@ DOC_SCHEMA = T.StructType(
 _NUM_BUCKETS = 256
 
 
+#: Docs arrive once (the family's disjoint-arrival contract, the same
+#: one the readout's plain union relies on), so (doc, bucket) cells
+#: never repeat across batches: the sum fold is the identity on
+#: content and compaction only collapses the partition chain.
+DOCBUCKETS = Cells(
+    "docbuckets",
+    "doc_id long, bkt int, cnt long",
+    ("doc_id", "bkt"),
+    {"cnt": "sum"},
+)
+SPEC = (DOCBUCKETS,)
+
+
 def run_incremental_dsir(
     spark: SparkSession,
     input_path: str,
     work_dir: str,
     schema: T.StructType | None = None,
-    compact_after_drain: bool = False,
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text) into
     the DSIR state under ``work_dir`` (docbuckets/, ckpt/)."""
     from ..operators.sampling import _dsir_feature_buckets
 
-    docbuckets_dir = os.path.join(work_dir, "docbuckets")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        counts = (
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
+        commit(
+            "docbuckets",
             _dsir_feature_buckets(batch_df, "text", "doc_id", _NUM_BUCKETS)
             .groupBy("_doc", "bkt")
             .agg(F.count("*").alias("cnt"))
-            .select(F.col("_doc").alias("doc_id"), "bkt", "cnt")
-        )
-        counts.write.mode("overwrite").parquet(
-            os.path.join(docbuckets_dir, f"batch_id={batch_id}")
+            .select(F.col("_doc").alias("doc_id"), "bkt", "cnt"),
         )
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        # docs arrive once (the family's disjoint-arrival contract, the
-        # same one the readout's plain union already relies on), so the
-        # (doc, bucket) cells across batches are disjoint and the sum
-        # fold is the identity on content — it only collapses the
-        # partition chain
-        compact_additive_cells(
-            spark,
-            docbuckets_dir,
-            "doc_id long, bkt int, cnt long",
-            key_cols=["doc_id", "bkt"],
-            sum_cols=["cnt"],
-            ckpt_dir=ckpt_dir,
-        )
+    drain(spark, input_path, work_dir, schema or DOC_SCHEMA, batch_fn)
 
 
 def query_dsir_scores(
@@ -132,17 +103,9 @@ def query_dsir_scores(
     and a fraction of the corpus it summarizes."""
     from ..operators.sampling import _dsir_feature_buckets, dsir_log_ratio
 
-    from .state import read_state_or_empty
-
-    # explicit schema + FS-agnostic absent-path handling via the
-    # shared state reader: an undrained (or all-empty-batches) state
-    # is a legitimate "nothing scored yet" relation, not a crash
-    # (ADVICE r4 / the semantic_ingest lesson)
-    db = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "docbuckets"),
-        "doc_id long, bkt int, cnt long",
-    )
+    # an undrained (or all-empty-batches) state is a legitimate
+    # "nothing scored yet" relation, not a crash
+    db = read_state(spark, work_dir, DOCBUCKETS)
     r_cnt = db.groupBy("bkt").agg(F.sum("cnt").alias("rc"))
     t_cnt = (
         _dsir_feature_buckets(target, text_col, id_col, _NUM_BUCKETS)

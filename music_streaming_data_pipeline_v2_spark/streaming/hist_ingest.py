@@ -27,11 +27,11 @@ inherits ``doc_length_quantiles``'s DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import Cells, drain, read_merged
 
 DOC_SCHEMA = T.StructType(
     [
@@ -41,34 +41,24 @@ DOC_SCHEMA = T.StructType(
 )
 
 
+CELLS = Cells("cells", "value long, _cnt long", ("value",), {"_cnt": "sum"})
+SPEC = (CELLS,)
+
+
 def run_incremental_hist(
     spark: SparkSession,
     input_path: str,
     work_dir: str,
     schema: T.StructType | None = None,
     text_col: str = "text",
-    compact_after_drain: bool = False,
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text) into
     the token-length histogram state under ``work_dir`` (cells/,
-    ckpt/). ``compact_after_drain=True`` folds the cell chain into
-    the newest partition after the stream terminates
-    (state.compact_additive_cells — exact, readout cost stops
-    tracking drain count)."""
-    cells_dir = os.path.join(work_dir, "cells")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
+    ckpt/)."""
 
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
         from ..operators.packing import engine_safe_tokens
 
-        if batch_df.isEmpty():
-            return
         # the SAME measure the batch quantile query ranks
         # (doc_length_quantiles): engine-safe token count, null-safe
         lens = batch_df.select(
@@ -76,30 +66,9 @@ def run_incremental_hist(
                 F.size(engine_safe_tokens(text_col)).cast("long"), F.lit(0)
             ).alias("value")
         )
-        cells = lens.groupBy("value").agg(F.count("*").alias("_cnt"))
-        cells.write.mode("overwrite").parquet(
-            os.path.join(cells_dir, f"batch_id={batch_id}")
-        )
+        commit("cells", lens.groupBy("value").agg(F.count("*").alias("_cnt")))
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        compact_additive_cells(
-            spark,
-            cells_dir,
-            "value long, _cnt long",
-            key_cols=["value"],
-            sum_cols=["_cnt"],
-            ckpt_dir=ckpt_dir,
-        )
+    drain(spark, input_path, work_dir, schema or DOC_SCHEMA, batch_fn)
 
 
 def query_quantiles(
@@ -116,12 +85,7 @@ def query_quantiles(
     values), then the shared bounded-histogram cumsum readout —
     nothing re-reads raw text."""
     from ..operators.aggregates import quantiles_from_counts
-    from .state import read_state_or_empty
 
-    state = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "cells"),
-        "value long, _cnt long",
+    return quantiles_from_counts(
+        read_merged(spark, work_dir, CELLS), quantiles_permille
     )
-    merged = state.groupBy("value").agg(F.sum("_cnt").alias("_cnt"))
-    return quantiles_from_counts(merged, quantiles_permille)

@@ -19,11 +19,6 @@ registers and handing them to the SAME ``hll_estimate`` readout the
 batch operator uses — derived statistics are not stored, the state
 stays append-only, and replays stay idempotent.
 
-Delivery semantics: ``foreachBatch`` is at-least-once — state is
-partitioned by ``batch_id`` and each batch OVERWRITES its own
-partition, so a replay rewrites identical content (md5 registers are
-content-addressed).
-
 Equivalence contract: after draining any sequence of waves,
 ``query_cardinality`` returns EXACTLY what ``hll_distinct`` returns
 over the concatenation of all drained rows (register max-merge is
@@ -38,8 +33,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import Cells, drain, read_merged
+from .state import pin_params
 
 KEY_SCHEMA = T.StructType(
     [
@@ -51,34 +48,41 @@ KEY_SCHEMA = T.StructType(
 #: Register-addressing version: registers built under a different
 #: HLL_P (or a different hash slicing) place the same key in different
 #: buckets / draw rho from different bits — max-merging across schemes
-#: silently corrupts estimates, so the state pins its scheme on first
-#: drain (the sketch_ingest geometry contract).
+#: silently corrupts estimates, so the state pins its scheme
+#: (``scheme.json``) on first drain (the sketch_ingest geometry
+#: contract).
 HLL_ADDR_VERSION = 1
+
+
+def spec(group_col: str = "group") -> tuple[Cells]:
+    """The register state of a drain keyed by ``group_col``."""
+    return (
+        Cells(
+            "registers",
+            f"{group_col} string, bucket int, rho_max int",
+            (group_col, "bucket"),
+            {"rho_max": "max"},
+        ),
+    )
+
+
+SPEC = spec()
 
 
 def _check_scheme(spark: SparkSession, work_dir: str, write: bool) -> None:
     from ..operators.frequency import HLL_P
-    from .state import read_state_or_empty
 
-    geo_dir = os.path.join(work_dir, "scheme")
-    rows = read_state_or_empty(
-        spark, geo_dir, "hll_p int, addr_version int"
-    ).collect()
-    if rows:
-        got = (rows[0]["hll_p"], rows[0]["addr_version"])
-        if got != (HLL_P, HLL_ADDR_VERSION):
-            raise ValueError(
-                f"hll state at {work_dir!r} was built with p={got[0]} "
-                f"addressing v{got[1]}; this build uses p={HLL_P} "
-                f"v{HLL_ADDR_VERSION} — registers are not mergeable "
-                "across schemes, rebuild the state directory"
-            )
-        return
-    if write:
-        spark.createDataFrame(
-            [(int(HLL_P), int(HLL_ADDR_VERSION))],
-            "hll_p int, addr_version int",
-        ).write.mode("overwrite").parquet(geo_dir)
+    want = {"hll_p": int(HLL_P), "addr_version": int(HLL_ADDR_VERSION)}
+    got = pin_params(
+        spark, os.path.join(work_dir, "scheme.json"), want if write else None
+    )
+    if got is not None and got != want:
+        raise ValueError(
+            f"hll state at {work_dir!r} was built with p={got['hll_p']} "
+            f"addressing v{got['addr_version']}; this build uses "
+            f"p={HLL_P} v{HLL_ADDR_VERSION} — registers are not mergeable "
+            "across schemes, rebuild the state directory"
+        )
 
 
 def run_incremental_hll(
@@ -88,56 +92,20 @@ def run_incremental_hll(
     schema: T.StructType | None = None,
     group_col: str = "group",
     key_col: str = "key",
-    compact_after_drain: bool = False,
 ) -> None:
     """Drain ``input_path`` (JSON-lines files: group, key) into the
-    HLL register state under ``work_dir`` (registers/, ckpt/).
-    ``compact_after_drain=True`` folds the register chain into the
-    newest partition (bucket-wise MAX — exactly the readout's merge,
-    so estimates are bit-identical while readout cost stops tracking
-    drain count)."""
-    reg_dir = os.path.join(work_dir, "registers")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
+    HLL register state under ``work_dir`` (registers/, ckpt/)."""
     _check_scheme(spark, work_dir, write=True)
 
-    stream = (
-        spark.readStream.schema(schema or KEY_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
         from ..operators.frequency import hll_registers
 
-        if batch_df.isEmpty():
-            return
         # the SAME register builder as the batch sketch (incremental ≡
         # batch by construction: md5 registers are content-addressed
         # and max-mergeable)
-        regs = hll_registers(batch_df, key_col, [group_col])
-        regs.write.mode("overwrite").parquet(
-            os.path.join(reg_dir, f"batch_id={batch_id}")
-        )
+        commit("registers", hll_registers(batch_df, key_col, [group_col]))
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        compact_additive_cells(
-            spark,
-            reg_dir,
-            f"{group_col} string, bucket int, rho_max int",
-            key_cols=[group_col, "bucket"],
-            sum_cols={"rho_max": "max"},
-            ckpt_dir=ckpt_dir,
-        )
+    drain(spark, input_path, work_dir, schema or KEY_SCHEMA, batch_fn)
 
 
 def query_cardinality(
@@ -152,15 +120,7 @@ def query_cardinality(
     m rows) and a broadcast join of the ≤ m-row linear-counting table
     — nothing re-reads raw keys."""
     from ..operators.frequency import hll_estimate
-    from .state import read_state_or_empty
 
     _check_scheme(spark, work_dir, write=False)
-    state = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "registers"),
-        f"{group_col} string, bucket int, rho_max int",
-    )
-    merged = state.groupBy(group_col, "bucket").agg(
-        F.max("rho_max").alias("rho_max")
-    )
+    merged = read_merged(spark, work_dir, spec(group_col)[0])
     return hll_estimate(merged, [group_col])

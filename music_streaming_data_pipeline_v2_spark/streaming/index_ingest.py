@@ -21,11 +21,6 @@ token (co-locates query-time probes); df/N materialize into a
 vocabulary-sized summary table refreshed per compaction, exactly like
 the serving shapes in operators/serving.py.
 
-Delivery semantics: ``foreachBatch`` is at-least-once — both relations
-are partitioned by ``batch_id`` and each batch OVERWRITES its own
-partition, so a replay rewrites identical content (dedup_ingest's
-contract; tested by the replay test).
-
 Equivalence contract: after draining any sequence of waves,
 ``query_index`` over the accumulated state returns EXACTLY what
 ``bm25_topk`` returns over the concatenation of all drained documents
@@ -35,11 +30,11 @@ streaming layer's correctness inherit bm25_topk's DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import Cells, drain, read_state
 
 DOC_SCHEMA = T.StructType(
     [
@@ -49,31 +44,31 @@ DOC_SCHEMA = T.StructType(
 )
 
 
+#: Disjoint-arrival contract (as the readout's union assumes): no
+#: (doc, token) key repeats across batches, so the sum fold is
+#: content-identity and compaction only collapses the partition chain.
+POSTINGS = Cells(
+    "postings",
+    "doc_id long, token string, tf long",
+    ("doc_id", "token"),
+    {"tf": "sum"},
+)
+DOCLENS = Cells("doclens", "doc_id long, dl long", ("doc_id",), {"dl": "sum"})
+SPEC = (POSTINGS, DOCLENS)
+
+
 def run_incremental_index(
     spark: SparkSession,
     input_path: str,
     work_dir: str,
     schema: T.StructType | None = None,
-    compact_after_drain: bool = False,
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text) into
     the BM25 index state under ``work_dir`` (postings/, doclens/,
     ckpt/)."""
     from ..operators.text import tokens
 
-    postings_dir = os.path.join(work_dir, "postings")
-    doclens_dir = os.path.join(work_dir, "doclens")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
         # tokenize the batch ONCE; both state relations derive from tf
         tok = batch_df.select(
             "doc_id",
@@ -82,41 +77,10 @@ def run_incremental_index(
         tf = tok.groupBy("doc_id", "token").agg(
             F.count("*").alias("tf")
         ).localCheckpoint()  # one evaluation feeds both writes
-        dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        part = f"batch_id={batch_id}"
-        tf.write.mode("overwrite").parquet(os.path.join(postings_dir, part))
-        dl.write.mode("overwrite").parquet(os.path.join(doclens_dir, part))
+        commit("postings", tf)
+        commit("doclens", tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")))
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        # disjoint-arrival contract (as the readout's union assumes):
-        # no (doc, token) key repeats across batches, so the sum fold
-        # is content-identity and only collapses the partition chain
-        compact_additive_cells(
-            spark,
-            postings_dir,
-            "doc_id long, token string, tf long",
-            key_cols=["doc_id", "token"],
-            sum_cols=["tf"],
-            ckpt_dir=ckpt_dir,
-        )
-        compact_additive_cells(
-            spark,
-            doclens_dir,
-            "doc_id long, dl long",
-            key_cols=["doc_id"],
-            sum_cols=["dl"],
-            ckpt_dir=ckpt_dir,
-        )
+    drain(spark, input_path, work_dir, schema or DOC_SCHEMA, batch_fn)
 
 
 def query_index(
@@ -142,22 +106,10 @@ def query_index(
 
     from ..operators.text import tokens as _tokens
 
-    from .state import read_state_or_empty
-
-    # explicit schemas + FS-agnostic absent-path handling via the
-    # shared state reader: an undrained state is a legitimate "no
-    # results" relation, not a crash (ADVICE r4 / the semantic_ingest
-    # lesson)
-    tf = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "postings"),
-        "doc_id long, token string, tf long",
-    )
-    dl_rel = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "doclens"),
-        "doc_id long, dl long",
-    )
+    # an undrained state is a legitimate "no results" relation, not a
+    # crash
+    tf = read_state(spark, work_dir, POSTINGS)
+    dl_rel = read_state(spark, work_dir, DOCLENS)
     stats = dl_rel.groupBy().agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     )

@@ -36,23 +36,18 @@ hash so the anti-join co-locates instead of shuffling the state per
 batch; the state rows carry the exact line string, so hash collisions
 can't corrupt the rule (the hash would only route, never decide).
 
-Delivery semantics: ``foreachBatch`` is at-least-once — both state
-relations are partitioned by ``batch_id`` and each batch OVERWRITES
-its own partition, so a replay rewrites identical content
-(dedup_ingest's contract). Reads filter ``batch_id <`` current, so a
-crashed attempt's leftovers are invisible. Empty relations are never
-written (the r4-advisory zero-leader lesson: a partition holding only
-_SUCCESS poisons schema inference for every later read), and state
-reads of an undrained work_dir return empty typed relations.
+The line state never gets an empty partition (the r4-advisory
+zero-leader lesson: a partition holding only _SUCCESS poisons schema
+inference for every later read).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import Rows, drain, read_state
 
 DOC_SCHEMA = T.StructType(
     [
@@ -61,19 +56,9 @@ DOC_SCHEMA = T.StructType(
     ]
 )
 
-_LINES_SCHEMA = "line string, keep_doc_id long, keep_pos int"
-_DOCS_SCHEMA = "doc_id long, text string, n_lines long, n_dropped long"
-
-
-def _read_state(
-    spark: SparkSession, state_dir: str, schema: str, before_batch: int | None
-) -> DataFrame:
-    """Partition-pruned read of prior-batch state; empty typed relation
-    when the state doesn't exist yet. ``before_batch=None`` reads all
-    committed partitions (query-time)."""
-    from .state import read_state_or_empty
-
-    return read_state_or_empty(spark, state_dir, schema, before_batch)
+LINES = Rows("lines", "line string, keep_doc_id long, keep_pos int")
+DOCS = Rows("docs", "doc_id long, text string, n_lines long, n_dropped long")
+SPEC = (LINES, DOCS)
 
 
 def run_incremental_line_dedup(
@@ -85,19 +70,8 @@ def run_incremental_line_dedup(
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text) through
     the incremental line dedup under ``work_dir`` (lines/, docs/,
     ckpt/)."""
-    lines_dir = os.path.join(work_dir, "lines")
-    docs_dir = os.path.join(work_dir, "docs")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
 
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
         lines = (
             batch_df.select(
                 F.col("doc_id").alias("_id"),
@@ -110,7 +84,7 @@ def run_incremental_line_dedup(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        seen = _read_state(spark, lines_dir, _LINES_SCHEMA, batch_id).select(
+        seen = read_state(spark, work_dir, LINES, batch_id).select(
             F.col("line").alias("_line")
         )
         # lines whose first global occurrence is in THIS batch; one
@@ -142,39 +116,26 @@ def run_incremental_line_dedup(
                 ).alias("n_dropped"),
             )
         )
-        part = f"batch_id={batch_id}"
-        out.write.mode("overwrite").parquet(os.path.join(docs_dir, part))
+        commit("docs", out)
         state_rows = new_lines.select(
             F.col("_line").alias("line"),
             F.col("_id").alias("keep_doc_id"),
             F.col("_pos").alias("keep_pos"),
         )
         if not state_rows.isEmpty():  # never write a _SUCCESS-only partition
-            state_rows.write.mode("overwrite").parquet(
-                os.path.join(lines_dir, part)
-            )
+            commit("lines", state_rows)
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_path, work_dir, schema or DOC_SCHEMA, batch_fn)
 
 
 def read_deduped_docs(spark: SparkSession, work_dir: str) -> DataFrame:
     """All per-document outputs accumulated so far: (doc_id, text,
     n_lines, n_dropped) — the incremental twin of dedup_lines'
     return. Empty typed relation before the first drain."""
-    return _read_state(
-        spark, os.path.join(work_dir, "docs"), _DOCS_SCHEMA, None
-    )
+    return read_state(spark, work_dir, DOCS)
 
 
 def read_line_state(spark: SparkSession, work_dir: str) -> DataFrame:
     """The kept-line state: (line, keep_doc_id, keep_pos). Empty typed
     relation before the first drain."""
-    return _read_state(
-        spark, os.path.join(work_dir, "lines"), _LINES_SCHEMA, None
-    )
+    return read_state(spark, work_dir, LINES)

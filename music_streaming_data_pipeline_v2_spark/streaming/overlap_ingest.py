@@ -41,11 +41,10 @@ the sketch is precisely the part of the audit that survives ingest.)
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import Cells, drain, read_merged
 
 N_HASHES = 8
 
@@ -57,9 +56,13 @@ DOC_SCHEMA = T.StructType(
     ]
 )
 
-_STATE_SCHEMA = "g string, " + ", ".join(
-    f"_h{i} long" for i in range(N_HASHES)
+CELLS = Cells(
+    "cells",
+    "g string, " + ", ".join(f"_h{i} long" for i in range(N_HASHES)),
+    ("g",),
+    {f"_h{i}": "min" for i in range(N_HASHES)},
 )
+SPEC = (CELLS,)
 
 
 def run_incremental_overlap(
@@ -69,51 +72,22 @@ def run_incremental_overlap(
     schema: T.StructType | None = None,
     group_col: str = "source",
     shingle_k: int = 3,
-    compact_after_drain: bool = False,
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text,
     source) into the signature state under ``work_dir`` (cells/,
     ckpt/)."""
-    cells_dir = os.path.join(work_dir, "cells")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
 
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
         from ..operators.dedup import group_signatures
 
-        if batch_df.isEmpty():
-            return
-        sig = group_signatures(
-            batch_df, group_col=group_col, shingle_k=shingle_k
-        )
-        sig.write.mode("overwrite").parquet(
-            os.path.join(cells_dir, f"batch_id={batch_id}")
+        commit(
+            "cells",
+            group_signatures(
+                batch_df, group_col=group_col, shingle_k=shingle_k
+            ),
         )
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        compact_additive_cells(
-            spark,
-            cells_dir,
-            _STATE_SCHEMA,
-            key_cols=["g"],
-            sum_cols={f"_h{i}": "min" for i in range(N_HASHES)},
-            ckpt_dir=ckpt_dir,
-        )
+    drain(spark, input_path, work_dir, schema or DOC_SCHEMA, batch_fn)
 
 
 def query_overlap(spark: SparkSession, work_dir: str) -> DataFrame:
@@ -128,12 +102,6 @@ def query_overlap(spark: SparkSession, work_dir: str) -> DataFrame:
     raw text."""
     from ..operators.dedup import signature_overlap_pairs
 
-    from .state import read_state_or_empty
-
-    state = read_state_or_empty(
-        spark, os.path.join(work_dir, "cells"), _STATE_SCHEMA
+    return signature_overlap_pairs(
+        read_merged(spark, work_dir, CELLS), N_HASHES
     )
-    merged = state.groupBy("g").agg(
-        *[F.min(f"_h{i}").alias(f"_h{i}") for i in range(N_HASHES)]
-    )
-    return signature_overlap_pairs(merged, N_HASHES)

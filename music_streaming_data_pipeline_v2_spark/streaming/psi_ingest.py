@@ -18,11 +18,6 @@ operator uses (the index_ingest stance: derived statistics are not
 stored, so the ingest path stays append-only, replays stay idempotent,
 and the statistics are always exactly consistent with the state).
 
-Delivery semantics: ``foreachBatch`` is at-least-once — the state is
-partitioned by ``batch_id`` and each batch OVERWRITES its own
-partition, so a replay rewrites identical content (dedup_ingest's
-contract).
-
 Equivalence contract: after draining any sequence of waves,
 ``query_psi`` over the accumulated state returns EXACTLY what
 ``psi_drift`` returns over the concatenation of all drained documents
@@ -33,11 +28,11 @@ correctness thereby inherits psi_drift's DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import Cells, drain, read_merged
 
 DOC_SCHEMA = T.StructType(
     [
@@ -53,6 +48,12 @@ DOC_SCHEMA = T.StructType(
 DEFAULT_BIN_SQL = "LEAST(CAST(LENGTH(text) DIV 64 AS INT), 8)"
 
 
+CELLS = Cells(
+    "cells", "grp string, bin string, cnt long", ("grp", "bin"), {"cnt": "sum"}
+)
+SPEC = (CELLS,)
+
+
 def run_incremental_psi(
     spark: SparkSession,
     input_path: str,
@@ -60,59 +61,27 @@ def run_incremental_psi(
     schema: T.StructType | None = None,
     group_col: str = "source",
     bin_sql: str = DEFAULT_BIN_SQL,
-    compact_after_drain: bool = False,
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text,
     source) into the PSI cell state under ``work_dir`` (cells/,
-    ckpt/). ``compact_after_drain=True`` folds the cell chain into
-    the newest partition after the stream terminates
-    (state.compact_additive_cells — exact, readout cost stops
-    tracking drain count)."""
-    cells_dir = os.path.join(work_dir, "cells")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
+    ckpt/)."""
 
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
         from ..operators.drift import bin_cells
 
-        if batch_df.isEmpty():
-            return
         # the SAME cell builder as the batch audit (incremental ≡
         # batch by construction); bins are stored as STRINGS so the
         # state schema is independent of the caller's bin_sql type —
         # PSI depends only on bin identity, and int→string is
         # injective, so the pin to psi_drift is unaffected
-        cells = bin_cells(batch_df, group_col, F.expr(bin_sql)).select(
-            "grp", F.col("bin").cast("string").alias("bin"), "cnt"
-        )
-        cells.write.mode("overwrite").parquet(
-            os.path.join(cells_dir, f"batch_id={batch_id}")
+        commit(
+            "cells",
+            bin_cells(batch_df, group_col, F.expr(bin_sql)).select(
+                "grp", F.col("bin").cast("string").alias("bin"), "cnt"
+            ),
         )
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        compact_additive_cells(
-            spark,
-            cells_dir,
-            "grp string, bin string, cnt long",
-            key_cols=["grp", "bin"],
-            sum_cols=["cnt"],
-            ckpt_dir=ckpt_dir,
-        )
+    drain(spark, input_path, work_dir, schema or DOC_SCHEMA, batch_fn)
 
 
 def query_psi(
@@ -130,15 +99,7 @@ def query_psi(
     groups×bins PSI grid. Nothing re-reads raw text."""
     from ..operators.drift import psi_from_cells
 
-    from .state import read_state_or_empty
-
-    state = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "cells"),
-        "grp string, bin string, cnt long",
-    )
-    merged = state.groupBy("grp", "bin").agg(F.sum("cnt").alias("cnt"))
-    return psi_from_cells(merged, smoothing)
+    return psi_from_cells(read_merged(spark, work_dir, CELLS), smoothing)
 
 
 def query_ks(spark: SparkSession, work_dir: str) -> DataFrame:
@@ -156,20 +117,9 @@ def query_ks(spark: SparkSession, work_dir: str) -> DataFrame:
     corrupt the CDF)."""
     from ..operators.drift import ks_from_counts
 
-    from .state import read_state_or_empty
-
-    state = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "cells"),
-        "grp string, bin string, cnt long",
-    )
-    cnts = (
-        state.groupBy("grp", "bin")
-        .agg(F.sum("cnt").alias("c_g"))
-        .select(
-            F.col("grp").alias("g"),
-            F.col("bin").cast("bigint").alias("v"),
-            "c_g",
-        )
+    cnts = read_merged(spark, work_dir, CELLS).select(
+        F.col("grp").alias("g"),
+        F.col("bin").cast("bigint").alias("v"),
+        F.col("cnt").alias("c_g"),
     )
     return ks_from_counts(cnts).withColumnRenamed("g", "grp")

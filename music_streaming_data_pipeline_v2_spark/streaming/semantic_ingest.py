@@ -25,9 +25,10 @@ Shape per micro-batch (``foreachBatch``):
    greedily — the sequential dependency (a kept new vector becomes a
    leader for later new vectors in the same batch) lives inside one
    numpy kernel over one small cell, never across the cluster;
-4. idempotently commit: decisions and newly accepted leaders each
-   overwrite their ``batch_id=N`` partition (at-least-once replay
-   rewrites identical content, the dedup_ingest contract).
+4. commit decisions and newly accepted leaders through the drain
+   kernel (streaming/drain.py); the decisions are a pure function of
+   the batch and the leaders committed before it, so a replay
+   rewrites identical content.
 
 Scale: per-batch work is Σ_cell (batch_cell × leaders_cell) dot
 products — bounded by codebook granularity like the batch operator —
@@ -39,11 +40,11 @@ replay tests, like dedup_ingest).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import Rows, drain, read_state
 
 VEC_SCHEMA = T.StructType(
     [
@@ -106,6 +107,13 @@ def _leader_kernel(threshold: float):
     return kernel
 
 
+LEADERS = Rows(
+    "leaders", "vec_id long, embedding array<double>, centroid_id int"
+)
+DECISIONS = Rows("decisions", "vec_id long, centroid_id int, kept boolean")
+SPEC = (LEADERS, DECISIONS)
+
+
 def run_incremental_semantic_dedup(
     spark: SparkSession,
     input_path: str,
@@ -119,45 +127,22 @@ def run_incremental_semantic_dedup(
     (leaders/, decisions/, ckpt/)."""
     from ..operators.similarity import assign_centroid
 
-    leaders_dir = os.path.join(work_dir, "leaders")
-    decisions_dir = os.path.join(work_dir, "decisions")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
-    stream = (
-        spark.readStream.schema(schema or VEC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def read_leaders(before_batch: int, cells: list[int]) -> DataFrame:
-        from .state import read_state_or_empty
-
-        empty = "vec_id long, embedding array<double>, centroid_id int"
-        if not cells:
-            return spark.createDataFrame([], empty)
-        # the shared state reader declares the schema explicitly
-        # (inference must never depend on data files existing — a
-        # batch that accepted zero leaders leaves its batch_id=
-        # partition empty; ADVICE r4) and treats an absent path as the
-        # empty leader store through Spark's reader (FS-agnostic)
-        return read_state_or_empty(
-            spark, leaders_dir, empty, before_batch
-        ).filter(F.col("centroid_id").isin(cells))
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
         batch = (
             assign_centroid(batch_df, centroids, "embedding")
             .select("vec_id", "embedding", "centroid_id")
             .localCheckpoint()
         )
-        if batch.isEmpty():
-            return
         # touched cells only — the collect is ≤ n_centroids ints
         cells = [
             r["centroid_id"]
             for r in batch.select("centroid_id").distinct().collect()
         ]
-        old = read_leaders(batch_id, cells)
+        # the leader read directory-prunes to the touched cells (state
+        # is nested centroid_id partitions under each batch_id=)
+        old = read_state(spark, work_dir, LEADERS, batch_id).filter(
+            F.col("centroid_id").isin(cells)
+        )
         union = old.withColumn("_leader", F.lit(True)).unionByName(
             batch.withColumn("_leader", F.lit(False))
         )
@@ -166,10 +151,7 @@ def run_incremental_semantic_dedup(
             .applyInPandas(_leader_kernel(threshold), _KERNEL_SCHEMA)
             .localCheckpoint()  # one evaluation feeds both writes below
         )
-        part = f"batch_id={batch_id}"
-        decisions.drop("_lead").write.mode("overwrite").parquet(
-            os.path.join(decisions_dir, part)
-        )
+        commit("decisions", decisions.drop("_lead"))
         new_leaders = batch.join(
             decisions.filter("_lead").select("vec_id"), "vec_id"
         ).select("vec_id", "embedding", "centroid_id")
@@ -180,14 +162,6 @@ def run_incremental_semantic_dedup(
         # (ADVICE r4). decisions is localCheckpointed, so the isEmpty
         # probe reuses the evaluated batch rather than recomputing.
         if not new_leaders.isEmpty():
-            new_leaders.write.mode("overwrite").partitionBy(
-                "centroid_id"
-            ).parquet(os.path.join(leaders_dir, part))
+            commit("leaders", new_leaders, partition_by=["centroid_id"])
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_path, work_dir, schema or VEC_SCHEMA, batch_fn)

@@ -19,12 +19,6 @@ handing them to the SAME ``count_min_estimate`` readout the batch
 operator uses — derived statistics are not stored, the state stays
 append-only, and replays stay idempotent (the index_ingest stance).
 
-Delivery semantics: ``foreachBatch`` is at-least-once — state is
-partitioned by ``batch_id`` and each batch OVERWRITES its own
-partition, so a replay rewrites identical content (dedup_ingest's
-contract; md5 cell placement is content-addressed, so the rewritten
-cells are bit-identical).
-
 Equivalence contract: after draining any sequence of waves,
 ``query_estimates`` over the accumulated state returns EXACTLY what
 ``count_min_cells`` + ``count_min_estimate`` return over the
@@ -41,6 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .drain import Cells, drain, read_merged
+from .state import pin_params
+
 DOC_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -50,13 +47,21 @@ DOC_SCHEMA = T.StructType(
 )
 
 #: Sketch geometry fixed per state directory: cells from different
-#: (width, depth) are not mergeable, so the ingest PINS one shape in a
-#: geometry/ state relation written on first drain and asserted on
-#: every later drain and readout — a mismatched probe would otherwise
-#: read mod-width buckets that were placed mod a different width and
+#: (width, depth) are not mergeable, so the ingest PINS one shape
+#: (``geometry.json``) on first drain and asserts it on every later
+#: drain and readout — a mismatched probe would otherwise read
+#: mod-width buckets that were placed mod a different width and
 #: silently UNDERCOUNT, the one error class the sketch contract rules
 #: out.
 DEFAULT_WIDTH, DEFAULT_DEPTH = 2048, 4
+
+CELLS = Cells(
+    "cells",
+    "depth_row int, bucket int, cell_count long",
+    ("depth_row", "bucket"),
+    {"cell_count": "sum"},
+)
+SPEC = (CELLS,)
 
 
 def _check_geometry(
@@ -66,40 +71,36 @@ def _check_geometry(
     ``(width, depth)`` if nothing is pinned yet (``write=True``) and
     raising on any mismatch with an existing pin."""
     from ..operators.frequency import CM_ADDR_VERSION
-    from .state import read_state_or_empty
 
-    geo_dir = os.path.join(work_dir, "geometry")
-    # addr_version reads as NULL from state written before the column
-    # existed (v1 = the 4-hex-digit addressing) — those cells place the
-    # same key in different buckets than the current arithmetic, so
-    # merging would silently undercount; reject and rebuild instead
-    rows = read_state_or_empty(
-        spark, geo_dir, "width int, depth int, addr_version int"
-    ).collect()
-    if rows:
-        got = (rows[0]["width"], rows[0]["depth"])
-        ver = rows[0]["addr_version"] or 1
-        if ver != CM_ADDR_VERSION:
-            raise ValueError(
-                f"sketch state at {work_dir!r} was built with bucket-"
-                f"addressing v{ver}; this build uses "
-                f"v{CM_ADDR_VERSION} — cells are not mergeable across "
-                "addressing schemes, rebuild the state directory"
-            )
-        if (width, depth) != got:
-            raise ValueError(
-                f"sketch state at {work_dir!r} is pinned to "
-                f"width={got[0]} depth={got[1]}; got width={width} "
-                f"depth={depth} — cells from different geometries are "
-                "not mergeable"
-            )
-        return got
-    if write:
-        spark.createDataFrame(
-            [(int(width), int(depth), int(CM_ADDR_VERSION))],
-            "width int, depth int, addr_version int",
-        ).write.mode("overwrite").parquet(geo_dir)
-    return (width, depth)
+    want = {
+        "width": int(width),
+        "depth": int(depth),
+        "addr_version": int(CM_ADDR_VERSION),
+    }
+    got = pin_params(
+        spark, os.path.join(work_dir, "geometry.json"), want if write else None
+    )
+    if got is None:
+        return (width, depth)
+    # cells placed under another bucket addressing put the same key in
+    # different buckets — merging would silently undercount
+    ver = got["addr_version"]
+    if ver != CM_ADDR_VERSION:
+        raise ValueError(
+            f"sketch state at {work_dir!r} was built with bucket-"
+            f"addressing v{ver}; this build uses "
+            f"v{CM_ADDR_VERSION} — cells are not mergeable across "
+            "addressing schemes, rebuild the state directory"
+        )
+    pinned = (got["width"], got["depth"])
+    if (width, depth) != pinned:
+        raise ValueError(
+            f"sketch state at {work_dir!r} is pinned to "
+            f"width={pinned[0]} depth={pinned[1]}; got width={width} "
+            f"depth={depth} — cells from different geometries are "
+            "not mergeable"
+        )
+    return pinned
 
 
 def run_incremental_sketch(
@@ -110,27 +111,16 @@ def run_incremental_sketch(
     text_col: str = "text",
     width: int = DEFAULT_WIDTH,
     depth: int = DEFAULT_DEPTH,
-    compact_after_drain: bool = False,
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text,
     source) into the count-min cell state under ``work_dir`` (cells/,
     ckpt/), sketching every lowercased whitespace token occurrence."""
-    cells_dir = os.path.join(work_dir, "cells")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
     _check_geometry(spark, work_dir, width, depth, write=True)
 
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
         from ..operators.frequency import count_min_cells
         from ..operators.packing import engine_safe_tokens
 
-        if batch_df.isEmpty():
-            return
         toks = batch_df.select(
             F.explode(
                 F.transform(engine_safe_tokens(text_col), F.lower)
@@ -139,30 +129,9 @@ def run_incremental_sketch(
         # the SAME cell builder as the batch sketch (incremental ≡
         # batch by construction: md5 placements are content-addressed
         # and cells are additive)
-        cells = count_min_cells(toks, "token", width, depth)
-        cells.write.mode("overwrite").parquet(
-            os.path.join(cells_dir, f"batch_id={batch_id}")
-        )
+        commit("cells", count_min_cells(toks, "token", width, depth))
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        compact_additive_cells(
-            spark,
-            cells_dir,
-            "depth_row int, bucket int, cell_count long",
-            key_cols=["depth_row", "bucket"],
-            sum_cols=["cell_count"],
-            ckpt_dir=ckpt_dir,
-        )
+    drain(spark, input_path, work_dir, schema or DOC_SCHEMA, batch_fn)
 
 
 def query_estimates(
@@ -184,15 +153,6 @@ def query_estimates(
     rows), broadcast to the probe join — nothing re-reads raw text."""
     from ..operators.frequency import count_min_estimate
 
-    from .state import read_state_or_empty
-
     width, depth = _check_geometry(spark, work_dir, width, depth, write=False)
-    state = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "cells"),
-        "depth_row int, bucket int, cell_count long",
-    )
-    merged = state.groupBy("depth_row", "bucket").agg(
-        F.sum("cell_count").alias("cell_count")
-    )
+    merged = read_merged(spark, work_dir, CELLS)
     return count_min_estimate(keys, merged, col, width, depth)

@@ -1,9 +1,9 @@
 """Shared batch-partitioned state access for the ingest indexes.
 
 Every incremental pipeline in this package stores its state the same
-way: parquet partitioned by ``batch_id=``, each batch OVERWRITING its
-own partition (at-least-once replays rewrite identical content). This
-module is the ONE reader for that layout:
+way: parquet partitioned by ``batch_id=``, one partition per batch
+(the drain kernel's commit, streaming/drain.py). This module is the
+ONE reader for that layout, plus its maintenance and parameter pins:
 
 - **explicit schema, always** — state reads must never depend on data
   files existing; a batch that commits an empty partition (zero
@@ -56,11 +56,44 @@ def read_state_or_empty(
     return df.drop("batch_id")
 
 
+def _fs(spark: SparkSession, path: str):
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    return jvm_path.getFileSystem(hconf), jvm_path
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence probe through the Hadoop FileSystem API (never a
+    driver-local ``os.path`` check, which reads object-store state as
+    absent)."""
+    fs, p = _fs(spark, path)
+    return bool(fs.exists(p))
+
+
+def _batch_ids(spark: SparkSession, state_dir: str) -> list[int]:
+    """Sorted ``batch_id=`` partition ids of a state directory (FS
+    listing through the Hadoop FileSystem API, no Spark job); empty
+    when the directory is absent."""
+    fs, root = _fs(spark, state_dir)
+    if not fs.exists(root):
+        return []
+    ids = []
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if name.startswith("batch_id="):
+            try:
+                ids.append(int(name.split("=", 1)[1]))
+            except ValueError:
+                continue
+    return sorted(ids)
+
+
 def prune_snapshots(
     spark: SparkSession,
     state_dir: str,
     keep_latest: int = 1,
-    ckpt_dir: str | None = None,
+    *,
+    ckpt_dir: str,
 ) -> list[int]:
     """Partition-deletion maintenance for state whose newest partition
     is SELF-CONTAINED — today that means a ``read_resolved_labels``
@@ -73,32 +106,19 @@ def prune_snapshots(
     partitions there still hold live label rows.
 
     Safe under at-least-once replay only between drains (not
-    mid-stream), which is also when a maintenance job would run —
-    pass ``ckpt_dir`` to enforce (``assert_quiesced``).
+    mid-stream): ``assert_quiesced`` on ``ckpt_dir`` enforces it (a
+    caller with no stream passes an absent checkpoint path).
     Never deletes the newest ``keep_latest`` (≥ 1 enforced)."""
     if keep_latest < 1:
         raise ValueError("keep_latest must be >= 1")
-    if ckpt_dir is not None:
-        assert_quiesced(spark, ckpt_dir)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(state_dir)
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm_path.getFileSystem(hconf)
-    if not fs.exists(jvm_path):
-        return []
-    batches = []
-    for st in fs.listStatus(jvm_path):
-        name = st.getPath().getName()
-        if name.startswith("batch_id="):
-            try:
-                batches.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    doomed = sorted(batches)[:-keep_latest]
+    assert_quiesced(spark, ckpt_dir)
+    fs, _ = _fs(spark, state_dir)
+    doomed = _batch_ids(spark, state_dir)[:-keep_latest]
     for b in doomed:
-        p = spark._jvm.org.apache.hadoop.fs.Path(
-            state_dir, f"batch_id={b}"
+        fs.delete(
+            spark._jvm.org.apache.hadoop.fs.Path(state_dir, f"batch_id={b}"),
+            True,
         )
-        fs.delete(p, True)
     return doomed
 
 
@@ -113,23 +133,12 @@ def latest_batch_id(
     restricts to partitions strictly older — the recovery-isolation
     view a replaying batch must use (a crashed prior attempt at the
     CURRENT batch may have left its own partition behind)."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(state_dir)
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm_path.getFileSystem(hconf)
-    if not fs.exists(jvm_path):
-        return None
-    best = None
-    for st in fs.listStatus(jvm_path):
-        name = st.getPath().getName()
-        if name.startswith("batch_id="):
-            try:
-                b = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if before_batch is not None and b >= before_batch:
-                continue
-            best = b if best is None else max(best, b)
-    return best
+    ids = [
+        b
+        for b in _batch_ids(spark, state_dir)
+        if before_batch is None or b < before_batch
+    ]
+    return ids[-1] if ids else None
 
 
 def read_resolved_labels(
@@ -172,12 +181,6 @@ def read_resolved_labels(
         )
     )
     return resolved, latest
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    return jvm_path.getFileSystem(hconf), jvm_path
 
 
 def assert_quiesced(spark: SparkSession, ckpt_dir: str) -> None:
@@ -269,16 +272,9 @@ def _heal_torn_compaction(spark: SparkSession, state_dir: str) -> None:
             healed = int(name.split("=", 1)[1])
     fs.delete(tmp_path, True)
     if healed is not None:
-        root = Path(state_dir)
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name.startswith("batch_id="):
-                try:
-                    b = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if b < healed:
-                    fs.delete(st.getPath(), True)
+        for b in _batch_ids(spark, state_dir):
+            if b < healed:
+                fs.delete(Path(state_dir, f"batch_id={b}"), True)
 
 
 def compact_label_deltas(
@@ -286,7 +282,8 @@ def compact_label_deltas(
     state_dir: str,
     schema: str | T.StructType,
     key_col: str = "id",
-    ckpt_dir: str | None = None,
+    *,
+    ckpt_dir: str,
 ) -> list[int]:
     """Fold a ``read_resolved_labels`` delta chain: resolve the
     current labeling, publish it as the NEWEST partition (now a
@@ -298,27 +295,45 @@ def compact_label_deltas(
     Same safety contract as ``prune_snapshots``: run only BETWEEN
     drains (stream terminated ⇒ checkpoint committed ⇒ the newest
     batch can no longer replay; a replay of batch N rewrites only
-    N's DELTA, which would silently drop the folded history). Pass
-    ``ckpt_dir`` to ENFORCE that contract — ``assert_quiesced``
-    refuses when the checkpoint shows an uncommitted batch."""
-    if ckpt_dir is not None:
-        assert_quiesced(spark, ckpt_dir)
+    N's DELTA, which would silently drop the folded history).
+    ``assert_quiesced`` on ``ckpt_dir`` refuses when the checkpoint
+    shows an uncommitted batch."""
+    assert_quiesced(spark, ckpt_dir)
     _heal_torn_compaction(spark, state_dir)
     res = read_resolved_labels(spark, state_dir, schema, key_col)
     if res is None:
         return []
     resolved, latest = res
     _swap_in_partition(spark, state_dir, resolved, latest)
-    return prune_snapshots(spark, state_dir, keep_latest=1)
+    return prune_snapshots(spark, state_dir, ckpt_dir=ckpt_dir)
 
 
-#: Per-column fold functions ``compact_additive_cells`` accepts — the
-#: three mergeable-summary algebras the ingest families use: counts
-#: fold by SUM (value/hist/psi/vocab/sketch cells), HLL registers by
-#: MAX (rho per bucket), MinHash signatures by MIN (hash per slot).
-#: All three are associative+commutative+idempotent-or-exact over the
-#: partition chain, which is what makes the fold lossless.
+#: Per-column fold functions ``fold_cells`` accepts — the three
+#: mergeable-summary algebras the ingest families use: counts fold by
+#: SUM (value/hist/psi/vocab/sketch cells), HLL registers by MAX (rho
+#: per bucket), MinHash signatures by MIN (hash per slot). All three
+#: are associative+commutative+idempotent-or-exact over the partition
+#: chain, which is what makes the fold lossless.
 _FOLD_FNS = {"sum": F.sum, "max": F.max, "min": F.min}
+
+
+def fold_cells(
+    cells: DataFrame,
+    key_cols: list[str] | tuple[str, ...],
+    fold: list[str] | dict[str, str],
+) -> DataFrame:
+    """Merge cell rows by ``key_cols``: a plain list of value columns
+    folds them all by SUM; a ``{col: "sum"|"max"|"min"}`` dict picks
+    the fold per column; an EMPTY ``fold`` is DISTINCT over the keys
+    (append-only set state). This is both every family's readout
+    merge and what ``compact_additive_cells`` materializes."""
+    if not isinstance(fold, dict):
+        fold = {c: "sum" for c in fold}
+    if not fold:
+        return cells.select(*key_cols).distinct()
+    return cells.groupBy(*key_cols).agg(
+        *[_FOLD_FNS[fn](c).alias(c) for c, fn in fold.items()]
+    )
 
 
 def compact_additive_cells(
@@ -327,51 +342,32 @@ def compact_additive_cells(
     schema: str | T.StructType,
     key_cols: list[str],
     sum_cols: list[str] | dict[str, str],
-    ckpt_dir: str | None = None,
+    *,
+    ckpt_dir: str,
 ) -> list[int]:
     """Fold an ADDITIVE cell chain (VERDICT r8 #2): every per-batch
-    ``batch_id=`` partition of (key…, count…) cells sums into the
-    newest partition, older partitions deleted. Cell addition is
-    associative and exact (integer sums), so the folded state serves
-    BIT-IDENTICAL readouts — the read-side twin of
-    ``compact_label_deltas``, for the 12 additive ingest families
-    (value/hist/psi/vocab/sketch/…) whose readout cost otherwise
-    grows with drain count: each query sums ALL ``batch_id=``
-    partitions, fine at 3 drains, linear pain at 10⁴⁻⁵ micro-batches.
-    Folding restores readout cost to the cell-space bound regardless
-    of history length.
-
-    ``sum_cols`` names the value columns; a plain list folds them all
-    by SUM (the count-cell families); a ``{col: fn}`` dict picks the
-    fold per column from ``_FOLD_FNS`` — ``"max"`` for HLL registers
-    (bucket-wise rho), ``"min"`` for MinHash signature slots — the
-    same merge each family's READOUT already applies, so the fold is
-    exactly one readout-merge materialized. An EMPTY ``sum_cols``
-    folds by DISTINCT over ``key_cols`` (append-only set state, e.g.
-    pair lists).
+    ``batch_id=`` partition of (key…, value…) cells folds into the
+    newest partition (``fold_cells`` with ``sum_cols`` as the fold),
+    older partitions deleted. The folds are exact, so the folded state
+    serves BIT-IDENTICAL readouts — the read-side twin of
+    ``compact_label_deltas`` for the families whose readout cost
+    otherwise grows with drain count (each query merges ALL
+    ``batch_id=`` partitions: fine at 3 drains, linear pain at
+    10⁴⁻⁵ micro-batches).
 
     Safety contract identical to ``compact_label_deltas`` (between
     drains only — a replaying batch rewrites only its own partition
-    and would silently drop folded history); pass ``ckpt_dir`` to
-    enforce via ``assert_quiesced``. Publication is temp + rename
+    and would silently drop folded history), enforced by
+    ``assert_quiesced`` on ``ckpt_dir``. Publication is temp + rename
     with torn-compaction healing. Returns the deleted batch ids."""
-    if ckpt_dir is not None:
-        assert_quiesced(spark, ckpt_dir)
+    assert_quiesced(spark, ckpt_dir)
     _heal_torn_compaction(spark, state_dir)
     latest = latest_batch_id(spark, state_dir)
     if latest is None:
         return []
-    cells = read_state_or_empty(spark, state_dir, schema)
-    if isinstance(sum_cols, dict):
-        fold = {c: _FOLD_FNS[fn] for c, fn in sum_cols.items()}
-    else:
-        fold = {c: F.sum for c in sum_cols}
-    if fold:
-        folded = cells.groupBy(*key_cols).agg(
-            *[fn(c).alias(c) for c, fn in fold.items()]
-        )
-    else:
-        folded = cells.select(*key_cols).distinct()
+    folded = fold_cells(
+        read_state_or_empty(spark, state_dir, schema), key_cols, sum_cols
+    )
     # preserve the declared column order/types — partition readers
     # declare the schema explicitly, but keep the file layout uniform
     base = spark.createDataFrame([], schema)
@@ -379,4 +375,43 @@ def compact_additive_cells(
         *[F.col(c).cast(dict(base.dtypes)[c]) for c in base.columns]
     )
     _swap_in_partition(spark, state_dir, folded, latest)
-    return prune_snapshots(spark, state_dir, keep_latest=1)
+    return prune_snapshots(spark, state_dir, ckpt_dir=ckpt_dir)
+
+
+def pin_params(
+    spark: SparkSession,
+    path: str,
+    params: dict | None,
+    replace: bool = False,
+) -> dict | None:
+    """The parameter pin of a state directory: state built under one
+    set of hashing/geometry parameters is not mergeable with state
+    built under another, so each family records its parameters in a
+    small JSON file beside the state and checks every later drain and
+    readout against it. Reads and writes go through the Hadoop
+    FileSystem API (never driver-local ``open()``), so the pin lives
+    wherever the state does.
+
+    Returns the pinned object, or None when nothing is pinned yet — in
+    which case ``params`` (unless None) is written. ``replace=True``
+    overwrites an existing pin instead of returning it. The caller
+    compares and raises its own mismatch error."""
+    import json
+
+    fs, p = _fs(spark, path)
+    if fs.exists(p) and not replace:
+        stream = fs.open(p)
+        try:
+            text = spark._jvm.org.apache.commons.io.IOUtils.toString(
+                stream, "UTF-8"
+            )
+        finally:
+            stream.close()
+        return json.loads(text)
+    if params is not None:
+        out = fs.create(p, True)
+        try:
+            out.write(bytearray(json.dumps(params).encode("utf-8")))
+        finally:
+            out.close()
+    return None

@@ -81,71 +81,3 @@ def streaming_dedup(
         list(key_cols)
     )
 
-
-def running_user_totals_tws(
-    stream: DataFrame,
-    user_col: str = "user_id",
-    measure_col: str = "duration_ms",
-) -> DataFrame:
-    """`running_user_totals` on the transformWithStateInPandas API
-    (Spark 4's arbitrary-stateful-processing successor to
-    ``applyInPandasWithState``): state lives in named, typed handles
-    (ValueState here; List/MapState for richer shapes) backed by the
-    RocksDB state store, with optional per-state TTL replacing the
-    coarse GroupStateTimeout — the right surface for new stateful
-    operators; the applyInPandasWithState twin above stays as the
-    compatibility form.
-
-    Output: (user_id, n_events, total_ms) — cumulative totals so far,
-    one update row per key per batch it appears in.
-
-    Requires ``protobuf`` (the state-server wire protocol of this API);
-    environments without it should use the ``running_user_totals``
-    twin — identical semantics.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise RuntimeError(
-            "transformWithStateInPandas needs the protobuf package; "
-            "use running_user_totals (applyInPandasWithState) instead"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    measure = measure_col
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n_events long, total_ms long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                n_events, total = self._state.get()
-            else:
-                n_events, total = 0, 0
-            for pdf in rows:
-                n_events += len(pdf)
-                total += int(pdf[measure].sum())
-            self._state.update((n_events, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n_events],
-                    "total_ms": [total],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(user_col).transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType="user_id string, n_events long, total_ms long",
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -32,11 +32,11 @@ exact integer math; the readouts are shared code.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import Cells, drain, read_merged
 
 ROW_SCHEMA = T.StructType(
     [
@@ -48,6 +48,11 @@ ROW_SCHEMA = T.StructType(
 
 VALUE_SCALE = 100
 
+CELLS = Cells(
+    "cells", "grp string, v long, cnt long", ("grp", "v"), {"cnt": "sum"}
+)
+SPEC = (CELLS,)
+
 
 def run_incremental_values(
     spark: SparkSession,
@@ -56,27 +61,13 @@ def run_incremental_values(
     schema: T.StructType | None = None,
     group_col: str = "grp",
     value_col: str = "value",
-    compact_after_drain: bool = False,
 ) -> None:
     """Drain ``input_path`` (JSON-lines rows: id, grp, value) into the
-    per-group value-cell state under ``work_dir`` (cells/, ckpt/).
-    ``compact_after_drain=True`` folds the per-batch cell chain into
-    the newest partition once the stream terminates
-    (state.compact_additive_cells — exact integer sums, so readouts
-    are bit-identical while their cost stops tracking drain count)."""
-    cells_dir = os.path.join(work_dir, "cells")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
+    per-group value-cell state under ``work_dir`` (cells/, ckpt/)."""
 
-    stream = (
-        spark.readStream.schema(schema or ROW_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cells = (
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
+        commit(
+            "cells",
             batch_df.filter(F.col(value_col).isNotNull())
             .groupBy(
                 F.col(group_col).alias("grp"),
@@ -84,42 +75,10 @@ def run_incremental_values(
                 .cast("long")
                 .alias("v"),
             )
-            .agg(F.count("*").cast("long").alias("cnt"))
-        )
-        cells.write.mode("overwrite").parquet(
-            os.path.join(cells_dir, f"batch_id={batch_id}")
+            .agg(F.count("*").cast("long").alias("cnt")),
         )
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        compact_additive_cells(
-            spark,
-            cells_dir,
-            "grp string, v long, cnt long",
-            key_cols=["grp", "v"],
-            sum_cols=["cnt"],
-            ckpt_dir=ckpt_dir,
-        )
-
-
-def _summed_cells(spark: SparkSession, work_dir: str) -> DataFrame:
-    from .state import read_state_or_empty
-
-    state = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "cells"),
-        "grp string, v long, cnt long",
-    )
-    return state.groupBy("grp", "v").agg(F.sum("cnt").alias("cnt"))
+    drain(spark, input_path, work_dir, schema or ROW_SCHEMA, batch_fn)
 
 
 def query_mad_stats(
@@ -133,7 +92,7 @@ def query_mad_stats(
     re-read."""
     from ..operators.aggregates import mad_from_counts
 
-    cells = _summed_cells(spark, work_dir).select(
+    cells = read_merged(spark, work_dir, CELLS).select(
         F.col("grp").alias("_by"),
         F.col("v").alias("_v"),
         F.col("cnt").alias("_cnt"),
@@ -154,7 +113,7 @@ def query_value_quantiles(
     hash-exact)."""
     from ..operators.aggregates import grouped_quantiles_from_counts
 
-    cells = _summed_cells(spark, work_dir).select(
+    cells = read_merged(spark, work_dir, CELLS).select(
         F.col("grp").alias("_by"),
         F.col("v").alias("value"),
         F.col("cnt").alias("_cnt"),

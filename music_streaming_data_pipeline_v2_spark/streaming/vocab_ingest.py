@@ -20,20 +20,15 @@ Derived audits come from the SAME cores the batch operators use
 cells; ``coverage_curve_from_counts`` over the summed occurrence
 counts), so the ingest twins inherit the batch operators' DuckDB
 oracles through the equivalence pins in tests/test_vocab_ingest.py.
-
-Delivery semantics: ``foreachBatch`` is at-least-once — state is
-partitioned by ``batch_id`` and each batch OVERWRITES its own
-partition, so a replay rewrites identical content (dedup_ingest's
-contract).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import Cells, drain, read_merged
 
 DOC_SCHEMA = T.StructType(
     [
@@ -44,6 +39,15 @@ DOC_SCHEMA = T.StructType(
 )
 
 
+CELLS = Cells(
+    "cells",
+    "_tok string, _df long, _cnt long",
+    ("_tok",),
+    {"_df": "sum", "_cnt": "sum"},
+)
+SPEC = (CELLS,)
+
+
 def run_incremental_vocab(
     spark: SparkSession,
     input_path: str,
@@ -51,66 +55,19 @@ def run_incremental_vocab(
     schema: T.StructType | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    compact_after_drain: bool = False,
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text,
     source) into the vocabulary cell state under ``work_dir`` (cells/,
-    ckpt/). ``compact_after_drain=True`` folds the cell chain into the
-    newest partition (exact integer sums — identical readouts, cost
-    stops tracking drain count)."""
-    cells_dir = os.path.join(work_dir, "cells")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
+    ckpt/)."""
 
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
         from ..operators.quality import vocab_cells
 
-        if batch_df.isEmpty():
-            return
         # the SAME cell builder as the batch audits (incremental ≡
         # batch by disjoint-document additivity)
-        cells = vocab_cells(batch_df, text_col, id_col)
-        cells.write.mode("overwrite").parquet(
-            os.path.join(cells_dir, f"batch_id={batch_id}")
-        )
+        commit("cells", vocab_cells(batch_df, text_col, id_col))
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        compact_additive_cells(
-            spark,
-            cells_dir,
-            "_tok string, _df long, _cnt long",
-            key_cols=["_tok"],
-            sum_cols=["_df", "_cnt"],
-            ckpt_dir=ckpt_dir,
-        )
-
-
-def _merged_cells(spark: SparkSession, work_dir: str) -> DataFrame:
-    from .state import read_state_or_empty
-
-    state = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "cells"),
-        "_tok string, _df long, _cnt long",
-    )
-    return state.groupBy("_tok").agg(
-        F.sum("_df").alias("_df"), F.sum("_cnt").alias("_cnt")
-    )
+    drain(spark, input_path, work_dir, schema or DOC_SCHEMA, batch_fn)
 
 
 def query_vocabulary(
@@ -121,7 +78,7 @@ def query_vocabulary(
     all drained documents (the min-doc-freq filter applied to summed
     cells; exact by disjoint-document additivity)."""
     return (
-        _merged_cells(spark, work_dir)
+        read_merged(spark, work_dir, CELLS)
         .filter(F.col("_df") >= int(min_doc_freq))
         .select("_tok")
     )
@@ -137,7 +94,7 @@ def query_coverage_curve(
     from ..operators.quality import coverage_curve_from_counts
 
     return coverage_curve_from_counts(
-        _merged_cells(spark, work_dir).select("_tok", "_cnt"), sizes
+        read_merged(spark, work_dir, CELLS).select("_tok", "_cnt"), sizes
     )
 
 
@@ -155,7 +112,7 @@ def query_bpe_merges(
     tests/test_vocab_ingest.py pins the equivalence."""
     from ..operators.bpe import bpe_merges_from_freqs
 
-    freqs = _merged_cells(spark, work_dir).select(
+    freqs = read_merged(spark, work_dir, CELLS).select(
         F.col("_tok").alias("word"), F.col("_cnt").alias("freq")
     )
     return bpe_merges_from_freqs(freqs, k=k)[0]
@@ -177,7 +134,7 @@ def query_unigram_vocab(
     lowercased corpus — tests/test_vocab_ingest.py pins it."""
     from ..operators.unigram import unigram_train_from_words
 
-    freqs = _merged_cells(spark, work_dir).select(
+    freqs = read_merged(spark, work_dir, CELLS).select(
         F.col("_tok").alias("word"), F.col("_cnt").alias("freq")
     )
     return unigram_train_from_words(
@@ -199,4 +156,4 @@ def query_phrase_dfreq(spark: SparkSession, work_dir: str) -> DataFrame:
     only candidate fan-out — the join verifies every candidate
     exactly, so gate OUTPUT is invariant (pinned by
     tests/test_vocab_ingest.py::test_phrase_gate_from_state)."""
-    return _merged_cells(spark, work_dir).select("_tok", "_df")
+    return read_merged(spark, work_dir, CELLS).select("_tok", "_df")

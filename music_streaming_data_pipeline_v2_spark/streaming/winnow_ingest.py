@@ -18,11 +18,6 @@ ingest path stays append-only and replays stay idempotent). The
 fp-keyed self-join naturally surfaces CROSS-batch pairs — a document
 ingested today is matched against every passage ingested before it.
 
-Delivery semantics: ``foreachBatch`` is at-least-once — the state is
-partitioned by ``batch_id`` and each batch OVERWRITES its own
-partition, so a replay rewrites identical content (dedup_ingest's
-contract).
-
 Equivalence contract: after draining any sequence of waves,
 ``query_overlap_pairs`` over the accumulated postings returns EXACTLY
 what the batch fp-join returns over the concatenation of all drained
@@ -33,11 +28,11 @@ common fingerprint) therefore holds across batch boundaries too.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import Rows, drain, read_state
 
 DOC_SCHEMA = T.StructType(
     [
@@ -45,6 +40,10 @@ DOC_SCHEMA = T.StructType(
         T.StructField("text", T.StringType()),
     ]
 )
+
+
+POSTINGS = Rows("postings", "doc_id long, fp long")
+SPEC = (POSTINGS,)
 
 
 def run_incremental_winnow(
@@ -59,30 +58,10 @@ def run_incremental_winnow(
     the winnow postings state under ``work_dir`` (postings/, ckpt/)."""
     from ..operators.text import winnow_fingerprints
 
-    postings_dir = os.path.join(work_dir, "postings")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
+    def batch_fn(batch_df: DataFrame, batch_id: int, commit) -> None:
+        commit("postings", winnow_fingerprints(batch_df, k=k, window=window))
 
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sk = winnow_fingerprints(batch_df, k=k, window=window)
-        sk.write.mode("overwrite").parquet(
-            os.path.join(postings_dir, f"batch_id={batch_id}")
-        )
-
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, input_path, work_dir, schema or DOC_SCHEMA, batch_fn)
 
 
 def query_overlap_pairs(
@@ -100,11 +79,9 @@ def query_overlap_pairs(
     one pair aggregate. Nothing re-reads text — at 100 TB the state is
     the (fp, doc) sketch relation, a bounded fraction of the corpus
     (≤ one row per kept window)."""
-    from .state import read_state_or_empty
-
-    sk = read_state_or_empty(
-        spark, os.path.join(work_dir, "postings"), "doc_id long, fp long"
-    ).localCheckpoint(eager=True)  # both join sides read it
+    sk = read_state(spark, work_dir, POSTINGS).localCheckpoint(
+        eager=True
+    )  # both join sides read it
     a = sk.select(F.col("doc_id").alias("id_a"), "fp")
     b = sk.select(F.col("doc_id").alias("id_b"), "fp")
     return (

@@ -192,7 +192,10 @@ def test_compact_label_deltas_keeps_serving_intact(spark, tmp_path):
     )
     labels_before = _vals(snap_before)
     deleted = compact_label_deltas(
-        spark, f"{work}/comps", "id long, component long"
+        spark,
+        f"{work}/comps",
+        "id long, component long",
+        ckpt_dir=f"{work}/ckpt",
     )
     assert deleted and all(b < bid for b in deleted)
     snap_after, bid2 = read_resolved_labels(
@@ -209,7 +212,10 @@ def test_compact_label_deltas_keeps_serving_intact(spark, tmp_path):
     assert _vals(query_curation(spark, work, BUDGET, EPOCHS, **GATE)) == before
     # compacting again deletes nothing (single partition left)
     assert compact_label_deltas(
-        spark, f"{work}/comps", "id long, component long"
+        spark,
+        f"{work}/comps",
+        "id long, component long",
+        ckpt_dir=f"{work}/ckpt",
     ) == []
     # a further drain keeps maintaining on top of the compacted chain
     _write_wave(
@@ -229,10 +235,13 @@ def test_compact_label_deltas_keeps_serving_intact(spark, tmp_path):
     )
 
 
-def test_prune_after_drain_flag_compacts(spark, tmp_path):
-    """`prune_after_drain=True` leaves a single self-contained comps/
-    partition after the drain, and serving still answers from it."""
+def test_compact_after_drain_folds_comps(spark, tmp_path):
+    """`compact` after a drain leaves a single self-contained comps/
+    partition, and serving still answers from it."""
     import os
+
+    from music_streaming_data_pipeline_v2_spark.streaming import dedup_ingest
+    from music_streaming_data_pipeline_v2_spark.streaming.drain import compact
 
     inp = tmp_path / "in"
     work = str(tmp_path / "work")
@@ -240,9 +249,8 @@ def test_prune_after_drain_flag_compacts(spark, tmp_path):
     _write_wave(inp / "w1.csv", WAVE1)
     run_incremental_dedup(spark, str(inp), work, **MINER)
     _write_wave(inp / "w2.csv", WAVE2)
-    run_incremental_dedup(
-        spark, str(inp), work, prune_after_drain=True, **MINER
-    )
+    run_incremental_dedup(spark, str(inp), work, **MINER)
+    compact(spark, work, dedup_ingest.SPEC)
     parts = [
         d
         for d in os.listdir(os.path.join(work, "comps"))

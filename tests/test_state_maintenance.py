@@ -11,6 +11,7 @@ import random
 
 import pytest
 
+from music_streaming_data_pipeline_v2_spark.streaming.drain import compact
 from music_streaming_data_pipeline_v2_spark.streaming.state import (
     assert_quiesced,
     compact_additive_cells,
@@ -19,6 +20,7 @@ from music_streaming_data_pipeline_v2_spark.streaming.state import (
     read_state_or_empty,
 )
 from music_streaming_data_pipeline_v2_spark.streaming.value_ingest import (
+    SPEC as VALUE_SPEC,
     query_mad_stats,
     query_value_quantiles,
     run_incremental_values,
@@ -90,9 +92,11 @@ def test_compact_additive_cells_identical_readout(spark, tmp_path):
         "grp string, v long, cnt long",
         key_cols=["grp", "v"],
         sum_cols=["cnt"],
+        ckpt_dir=os.path.join(work, "ckpt"),
     ) == []
     _write_wave(inp / "w3.jsonl", _mk_rows(rng, 5000, 40))
-    run_incremental_values(spark, str(inp), work, compact_after_drain=True)
+    run_incremental_values(spark, str(inp), work)
+    compact(spark, work, VALUE_SPEC)
     assert _partitions(cells_dir) == ["batch_id=3"]
 
 
@@ -104,6 +108,7 @@ def test_compact_additive_cells_empty_state(spark, tmp_path):
             "grp string, v long, cnt long",
             key_cols=["grp", "v"],
             sum_cols=["cnt"],
+            ckpt_dir=str(tmp_path / "no_ckpt"),
         )
         == []
     )
@@ -265,6 +270,7 @@ def test_torn_compaction_heals(spark, tmp_path):
         "grp string, v long, cnt long",
         key_cols=["grp", "v"],
         sum_cols=["cnt"],
+        ckpt_dir=os.path.join(work, "ckpt"),
     )
     assert _partitions(cells_dir) == [f"batch_id={latest}"]
     assert not os.path.exists(os.path.join(cells_dir, ".compact_tmp"))
@@ -281,6 +287,7 @@ def test_torn_compaction_heals(spark, tmp_path):
         "grp string, v long, cnt long",
         key_cols=["grp", "v"],
         sum_cols=["cnt"],
+        ckpt_dir=os.path.join(work, "ckpt"),
     )
     assert _vals(query_mad_stats(spark, work)) == want
 
@@ -306,6 +313,7 @@ def test_fold_modes_max_min_distinct(spark, tmp_path):
         "grp string, bucket int, rho_max int",
         key_cols=["grp", "bucket"],
         sum_cols={"rho_max": "max"},
+        ckpt_dir=str(tmp_path / "no_ckpt"),
     )
     assert _partitions(d) == ["batch_id=2"]
     got = sorted(
@@ -328,6 +336,7 @@ def test_fold_modes_max_min_distinct(spark, tmp_path):
         "g string, _h0 long, _h1 long",
         key_cols=["g"],
         sum_cols={"_h0": "min", "_h1": "min"},
+        ckpt_dir=str(tmp_path / "no_ckpt"),
     )
     got = [
         tuple(r)
@@ -344,7 +353,12 @@ def test_fold_modes_max_min_distinct(spark, tmp_path):
             f"{d}/batch_id={b}"
         )
     compact_additive_cells(
-        spark, d, "a long, b long", key_cols=["a", "b"], sum_cols=[]
+        spark,
+        d,
+        "a long, b long",
+        key_cols=["a", "b"],
+        sum_cols=[],
+        ckpt_dir=str(tmp_path / "no_ckpt"),
     )
     got = sorted(
         tuple(r)
@@ -354,8 +368,8 @@ def test_fold_modes_max_min_distinct(spark, tmp_path):
 
 
 def test_hll_and_overlap_compaction_end_to_end(spark, tmp_path):
-    """The register/signature families fold through their drains'
-    compact_after_drain flag with readouts unchanged."""
+    """The register/signature families fold through ``compact`` after
+    their drains with readouts unchanged."""
     import random
 
     from music_streaming_data_pipeline_v2_spark.streaming.hll_ingest import (
@@ -363,6 +377,7 @@ def test_hll_and_overlap_compaction_end_to_end(spark, tmp_path):
         run_incremental_hll,
     )
     from music_streaming_data_pipeline_v2_spark.streaming.overlap_ingest import (
+        SPEC as OVERLAP_SPEC,
         query_overlap,
         run_incremental_overlap,
     )
@@ -402,7 +417,7 @@ def test_hll_and_overlap_compaction_end_to_end(spark, tmp_path):
     assert len(_partitions(os.path.join(work, "registers"))) == 1
     assert _vals(query_cardinality(spark, work)) == before
 
-    # overlap: signature state folds by MIN through the drain flag
+    # overlap: signature state folds by MIN through compact
     inp2 = tmp_path / "ov_in"
     inp2.mkdir()
     work2 = str(tmp_path / "ov_work")
@@ -428,7 +443,8 @@ def test_hll_and_overlap_compaction_end_to_end(spark, tmp_path):
             json.dumps({"doc_id": 999, "text": "t1 t2 t3 t4", "source": "s0"})
             + "\n"
         )
-    run_incremental_overlap(spark, str(inp2), work2, compact_after_drain=True)
+    run_incremental_overlap(spark, str(inp2), work2)
+    compact(spark, work2, OVERLAP_SPEC)
     assert len(_partitions(os.path.join(work2, "cells"))) == 1
     after_full = _vals(query_overlap(spark, work2))
     # fold then drain again: readout still equals the re-derived one
@@ -438,9 +454,13 @@ def test_hll_and_overlap_compaction_end_to_end(spark, tmp_path):
 
 def test_dsir_and_index_compaction(spark, tmp_path):
     """The disjoint-arrival families (DSIR doc-bucket cells, BM25
-    postings/doclens) fold through compact_after_drain with readouts
+    postings/doclens) fold through ``compact`` with readouts
     unchanged — the sum fold is content-identity there (no key repeats
     across batches), it only collapses the partition chain."""
+    from music_streaming_data_pipeline_v2_spark.streaming import (
+        dsir_ingest,
+        index_ingest,
+    )
     from music_streaming_data_pipeline_v2_spark.streaming.dsir_ingest import (
         query_dsir_scores,
         run_incremental_dsir,
@@ -477,8 +497,10 @@ def test_dsir_and_index_compaction(spark, tmp_path):
             before = _vals(query_dsir_scores(spark, work, target))
         else:
             before = _vals(query_index(spark, work, queries, k=5))
-        # one more (empty) drain with compaction enabled folds the chain
-        runner(spark, str(inp), work, compact_after_drain=True)
+        # one more (empty) drain, then compaction folds the chain
+        runner(spark, str(inp), work)
+        spec = (dsir_ingest if fam == "dsir" else index_ingest).SPEC
+        compact(spark, work, spec)
         state_dirs = (
             ["docbuckets"] if fam == "dsir" else ["postings", "doclens"]
         )
@@ -541,6 +563,7 @@ def test_fold_equals_readout_merge_property(spark, tmp_path_factory, chain):
         "k string, s long, m long",
         key_cols=["k"],
         sum_cols={"s": "sum", "m": "max"},
+        ckpt_dir=d + "_no_ckpt",
     )
     got = {
         r["k"]: (r["s"], r["m"])

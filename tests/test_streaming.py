@@ -532,62 +532,6 @@ def test_stream_stream_join_with_watermarks(spark, tmp_path):
     assert got == [("a", "2024-06-25 10:00:30")]
 
 
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 stateful API): ValueState
-    persists across micro-batches, same semantics as the
-    applyInPandasWithState twin. Skips where protobuf (the API's wire
-    protocol) is unavailable; the gate itself is asserted."""
-    import pytest as _pytest
-
-    from music_streaming_data_pipeline_v2_spark.streaming.stateful import (
-        running_user_totals_tws,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        with _pytest.raises(RuntimeError, match="protobuf"):
-            running_user_totals_tws(spark.readStream.format("rate").load())
-        _pytest.skip("protobuf not installed: transformWithState unavailable")
-
-    inp = tmp_path / "in"
-    inp.mkdir()
-    with open(inp / "stream_1.csv", "w") as f:
-        f.write("user_id,duration_ms\n1,100\n1,200\n2,50\n")
-    with open(inp / "stream_2.csv", "w") as f:
-        f.write("user_id,duration_ms\n1,300\n3,10\n")
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.StringType()),
-            T.StructField("duration_ms", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("header", "true")
-        .option("maxFilesPerTrigger", "1")
-        .csv(str(inp))
-    )
-    totals = running_user_totals_tws(stream)
-    (
-        totals.writeStream.format("memory")
-        .queryName("totals_tws_mem")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    rows = spark.sql("select * from totals_tws_mem").collect()
-    last = {}
-    for r in rows:
-        last[r.user_id] = (r.n_events, r.total_ms)
-    assert last["1"] == (3, 600)
-    assert last["2"] == (1, 50)
-    assert last["3"] == (1, 10)
-
-
 def test_incremental_dedup_index(spark, tmp_path):
     """Dedup-at-ingest: the LSH index accumulates across batches,
     each batch's near-dups are found against ALL history without

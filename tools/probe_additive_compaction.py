@@ -97,6 +97,8 @@ def main() -> None:
         "grp string, v long, cnt long",
         key_cols=["grp", "v"],
         sum_cols=["cnt"],
+        # fabricated chain, no stream: an absent checkpoint passes
+        ckpt_dir=os.path.join(work, "ckpt"),
     )
     fold_s = round(time.monotonic() - t0, 3)
     time.sleep(10)  # let the fold's GC/page-cache churn settle
