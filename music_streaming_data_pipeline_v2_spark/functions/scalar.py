@@ -6,7 +6,8 @@ key grammar lives in ONE place:
 
 - coercions (F1/F6): ``errors='coerce'`` semantics via try_cast
 - composite serving keys (F9): the DynamoDB key grammar
-  (dynamodb-ingestion.py:54, 67, 90-91, 117-118)
+  (dynamodb-ingestion.py:54, 67, 90-91, 117-118), built here and
+  parsed back here (``pk_date``)
 - normalization (F4 + fingerprint preprocessing)
 """
 
@@ -49,6 +50,18 @@ def genre_date_pk(genre: str | Column, date: str | Column) -> Column:
 def date_pk(date: str | Column) -> Column:
     """``DATE#{date}`` (dynamodb-ingestion.py:117)."""
     return F.concat_ws("#", F.lit("DATE"), _col(date).cast("string"))
+
+
+def pk_date(pk: str) -> str | None:
+    """The day a pk names: the field after its last ``DATE#`` — the
+    inverse of ``genre_date_pk`` / ``date_pk`` on the day, whatever the
+    genre holds (``#`` included, since the day is always the last
+    field). ``None`` when the pk has no non-empty final ``DATE#`` field,
+    e.g. ``concat_ws`` dropped a null date and left ``...#DATE``."""
+    head, sep, day = pk.rpartition("DATE#")
+    if not sep or not day or "#" in day or (head and not head.endswith("#")):
+        return None
+    return day
 
 
 def metric_sk(metric: str | Column) -> Column:

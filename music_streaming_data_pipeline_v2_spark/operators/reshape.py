@@ -17,9 +17,10 @@ Here the same reshapes are pure DataFrame ops (distributed, codegen'd):
 
 The unified ``kv`` relation (union of the three) is the serving table;
 operators/serving.py implements the 9 DynamoDB query patterns over it.
-At scale the kv table is written partitioned by a pk prefix bucket and
-sorted by (pk, sk) so prefix/range queries become partition-pruned,
-row-group-skipping scans.
+The kv table is written partitioned by ``date`` and sorted by (pk, sk)
+within files. Each projection takes ``date`` from the same value it puts
+in the pk, so serving derives the partition predicate from the pk and a
+lookup becomes a one-day, row-group-skipping scan.
 """
 
 from __future__ import annotations

@@ -279,6 +279,10 @@ def run_incremental_pipeline(
             | F.col("listen_time").isNull()
             | coerce_timestamp("listen_time").isNull()
         )
+        # The micro-batch is parsed ONCE: the validated write, the
+        # quarantine write and the strict probe all read it, and every
+        # read of an unpersisted batch_df re-scans the source files.
+        batch = batch_df.persist()
         # Quarantine probe rides the validated write's own pass: an
         # observation BELOW the validity filter counts invalid rows
         # while the write runs (CollectMetrics is a predicate-pushdown
@@ -287,10 +291,10 @@ def run_incremental_pipeline(
         # bad.isEmpty() was a whole extra source scan per batch just to
         # learn the common case (zero invalid rows).
         bad_obs: Observation | None = None
-        src = batch_df
+        src = batch
         if not strict and quarantine_dir is not None:
             bad_obs = Observation()
-            src = batch_df.observe(
+            src = batch.observe(
                 bad_obs, F.sum(invalid.cast("long")).alias("n_bad")
             )
         good = validate_streams(src, check_nonempty=False)
@@ -301,12 +305,13 @@ def run_incremental_pipeline(
             # raise fails the streaming query, the checkpoint does not
             # commit this batch, and a rerun reprocesses the same files
             # after the data is fixed.
-            n_bad = batch_df.filter(invalid).count()
+            n_bad = batch.filter(invalid).count()
             if n_bad:
+                batch.unpersist()
                 raise ValueError(
                     f"strict validation: {n_bad} invalid row(s) in batch {batch_id}"
                 )
-        good = good.withColumn("date", F.to_date("listen_time")).persist()
+        good = good.withColumn("date", F.to_date("listen_time"))
         # accumulate validated rows partitioned by (date, batch): date
         # for the recompute's partition pruning, batch so an
         # at-least-once REPLAY overwrites exactly its own slice instead
@@ -335,7 +340,7 @@ def run_incremental_pipeline(
             # of it dies with UNABLE_TO_INFER_SCHEMA (the line_ingest
             # r4 lesson) — replays are still idempotent, the same rows
             # skip again
-            batch_df.filter(invalid).withColumn(
+            batch.filter(invalid).withColumn(
                 "_batch_id", F.lit(batch_id)
             ).write.mode("overwrite").option(
                 "partitionOverwriteMode", "dynamic"
@@ -350,7 +355,7 @@ def run_incremental_pipeline(
         # frame, which prunes the date-partitioned store at runtime
         # via dynamic partition pruning instead.
         if not dates:
-            good.unpersist()
+            batch.unpersist()
             return
 
         def only_touched(df: DataFrame) -> DataFrame:
@@ -475,7 +480,7 @@ def run_incremental_pipeline(
                     replace_pks=True,
                 )
         _write_audit_manifest(spark, output_dir, batch_id, manifests)
-        good.unpersist()
+        batch.unpersist()
 
     (
         stream.writeStream.foreachBatch(process_batch)

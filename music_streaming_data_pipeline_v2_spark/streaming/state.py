@@ -10,11 +10,13 @@ ONE reader for that layout, plus its maintenance and parameter pins:
   leaders, all-duplicate lines) leaves ``_SUCCESS`` only, and
   inference-based reads crash on it (ADVICE r4 / the semantic_ingest
   lesson).
-- **absent path = empty state, through Spark's reader** — the probe
-  must NOT be a driver-local ``os.path`` check: state on any
-  Hadoop-compatible filesystem (object stores at the 100 TB target)
-  then silently reads as "nothing ingested yet". A PATH_NOT_FOUND from
-  the reader is the legitimate empty case; everything else re-raises.
+- **absent path = empty state, probed through the Hadoop FileSystem
+  API** (``path_exists``) — the probe must NOT be a driver-local
+  ``os.path`` check: state on any Hadoop-compatible filesystem (object
+  stores at the 100 TB target) then silently reads as "nothing
+  ingested yet". Probing first, instead of letting the reader fail with
+  PATH_NOT_FOUND, keeps a first drain from logging a listener ERROR
+  trace for a failed analysis; every reader error now propagates.
 - **partition-pruned recovery isolation** — ``before_batch`` excludes
   the CURRENT batch's partition, so a crashed prior attempt's partial
   write can never feed its own retry.
@@ -45,12 +47,9 @@ def read_state_or_empty(
     ``schema`` explicitly declared; an absent path returns the empty
     typed relation. ``before_batch`` prunes to committed prior
     batches (``None`` reads everything — the query-time view)."""
-    try:
-        df = spark.read.schema(_with_batch_id(schema)).parquet(state_dir)
-    except Exception as exc:  # PATH_NOT_FOUND → no state yet
-        if "PATH_NOT_FOUND" not in str(exc):
-            raise
+    if not path_exists(spark, state_dir):
         return spark.createDataFrame([], schema)
+    df = spark.read.schema(_with_batch_id(schema)).parquet(state_dir)
     if before_batch is not None:
         df = df.filter(F.col("batch_id") < F.lit(before_batch))
     return df.drop("batch_id")

@@ -133,7 +133,15 @@ def test_kv_serving_pushdown_on_parquet(spark, music, tmp_path):
     music.kv.write.mode("overwrite").parquet(path)
     kv = spark.read.parquet(path)
     q = query_pk_prefix(kv, "GENRE#rock#DATE#2024-06-25", "METRIC#")
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    # the lookup also pushes its date predicate, which makes the
+    # PushedFilters list longer than the default 100-char display cut
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1000")
+    try:
+        plan = q._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
     assert "EqualTo(pk,GENRE#rock#DATE#2024-06-25)" in plan
     assert "StringStartsWith(sk,METRIC#)" in plan
     assert q.count() == 4

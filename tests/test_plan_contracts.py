@@ -206,3 +206,48 @@ def test_observe_metric_is_pushdown_barrier(spark):
     assert plan.index("Filter") < plan.index("CollectMetrics")
     good.write.format("noop").mode("overwrite").save()
     assert obs.get["n_bad"] == 1
+
+
+def test_kv_lookup_prunes_to_its_date_partition(spark, tmp_path):
+    # A serving lookup derives a `date` PartitionFilter from its pk
+    # (operators/serving.py), so the scan opens only that day's files
+    # instead of every day's. inputFiles() lists a path-based
+    # relation's whole file index whatever the filter, so the files
+    # are read from the scan's own RDD partitions.
+    import os
+
+    from music_streaming_data_pipeline_v2_spark.operators.serving import (
+        query_pk_prefix,
+    )
+
+    days = ["2024-06-24", "2024-06-25", "2024-06-26"]
+    rows = [
+        (f"GENRE#g{g}#DATE#{d}", f"METRIC#m{m}", str(m), d)
+        for d in days for g in range(3) for m in range(4)
+    ]
+    path = str(tmp_path / "kv")
+    spark.createDataFrame(
+        rows, "pk string, sk string, value string, date string"
+    ).repartition(2).write.partitionBy("date").parquet(path)
+    kv = spark.read.parquet(path)
+
+    q = query_pk_prefix(kv, "GENRE#g1#DATE#2024-06-25", "METRIC#")
+    assert len(q.collect()) == 4
+    plan = q._jdf.queryExecution().executedPlan()
+    assert re.search(r"PartitionFilters: \[[^\]]*date", plan.toString())
+    leaves = plan.collectLeaves()
+    (scan,) = [
+        leaf for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if "FileSourceScanExec" in leaf.getClass().getName()
+    ]
+    read = {
+        os.path.basename(f.filePath().toString())
+        for p in scan.inputRDD().partitions()
+        for f in p.files()
+    }
+    day_files = {
+        f for f in os.listdir(os.path.join(path, "date=2024-06-25"))
+        if f.endswith(".parquet")
+    }
+    assert read == day_files
+    assert scan.metrics().apply("numFiles").value() == len(day_files)

@@ -1008,3 +1008,64 @@ def test_audit_manifest_matches_committed_partitions(spark, tmp_path):
             assert committed == man["n_rows"], (p, name, man)
             null_cols = [k for k in man if k.startswith("null_")]
             assert null_cols and all(man[k] == 0 for k in null_cols)
+
+
+def test_batch_with_invalid_rows_scans_its_source_once(spark, dims, tmp_path):
+    """A micro-batch holding unparseable rows feeds two writes (the
+    validated store and quarantine). Structured Streaming counts
+    ``numInputRows`` on the source scan, so it reads the file's row
+    count only when the batch is parsed once, not once per write."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    songs, users = dims
+    inp = tmp_path / "in"
+    inp.mkdir()
+    good = [f"{i % 3},t{i % 4},2024-06-25 10:{i:02d}:00" for i in range(40)]
+    bad = ["0,t1,not-a-time", "1,t2,2024-06-25 99:99:99", ",t0,2024-06-25 10:00:00"]
+    _write_stream_csv(str(inp / "stream1.csv"), good + bad)
+
+    runs: dict[str, list[int]] = {}
+    done = threading.Event()
+
+    class Rows(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            runs[str(event.runId)] = []
+
+        def onQueryProgress(self, event):
+            runs.setdefault(str(event.progress.runId), []).append(
+                event.progress.numInputRows
+            )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            done.set()
+
+    listener = Rows()
+    spark.streams.addListener(listener)
+    try:
+        run_incremental_pipeline(
+            spark, str(inp), songs, users,
+            output_dir=str(tmp_path / "out"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            quarantine_dir=str(tmp_path / "quar"),
+        )
+        assert done.wait(30), "no termination event from the listener bus"
+    finally:
+        spark.streams.removeListener(listener)
+
+    assert len(runs) == 1
+    assert sum(next(iter(runs.values()))) == len(good) + len(bad)
+    validated = spark.read.parquet(str(tmp_path / "out" / "validated"))
+    assert sorted(
+        (r.user_id, r.track_id, str(r.listen_time)) for r in validated.collect()
+    ) == sorted(
+        (u, t, ts) for u, t, ts in (line.split(",") for line in good)
+    )
+    quar = spark.read.parquet(str(tmp_path / "quar"))
+    assert sorted(
+        (r.user_id or "", r.track_id, r.listen_time) for r in quar.collect()
+    ) == sorted(tuple(line.split(",")) for line in bad)
