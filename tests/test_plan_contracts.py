@@ -18,6 +18,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from conftest import scan_filters
 
 from music_streaming_data_pipeline_v2_spark.plans.driver_queries import (
     REGISTRY,
@@ -26,11 +27,19 @@ from music_streaming_data_pipeline_v2_spark.plans.driver_queries import (
 SF_DIR = "/root/testdata/sf0.01"
 
 
-def _final_plan(spark, name: str) -> str:
+def _final_df(spark, name: str):
     df = REGISTRY[name].fn(spark, SF_DIR)
     df.collect()
+    return df
+
+
+def _plan_text(df) -> str:
     plan = df._jdf.queryExecution().executedPlan().toString()
     return plan.split("== Initial Plan ==")[0]
+
+
+def _final_plan(spark, name: str) -> str:
+    return _plan_text(_final_df(spark, name))
 
 
 def test_textrank_topk_is_take_ordered(spark):
@@ -58,13 +67,14 @@ def test_heavy_hitters_single_corpus_scan(spark):
 
 
 def test_hll_scan_pruned_and_filter_pushed(spark):
-    plan = _final_plan(spark, "hll_distinct_users")
+    df = _final_df(spark, "hll_distinct_users")
+    plan = _plan_text(df)
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     assert schemas, "no parquet scan found"
     for sc in schemas:
         cols = {c.split(":")[0] for c in sc.split(",") if c}
         assert cols <= {"ts", "user_id"}, cols
-    assert "IsNotNull(user_id)" in plan
+    assert "IsNotNull(user_id)" in scan_filters(df).pushed
 
 
 def test_enrichment_joins_broadcast_dims(spark):
@@ -77,9 +87,8 @@ def test_enrichment_joins_broadcast_dims(spark):
 
 
 def test_pricing_summary_pushes_predicate(spark):
-    plan = _final_plan(spark, "pricing_summary")
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    assert any(p.strip() for p in pushed), "no pushed filters at the scan"
+    pushed = scan_filters(_final_df(spark, "pricing_summary")).pushed
+    assert pushed, "no pushed filters at the scan"
 
 
 def test_quantiles_shuffle_value_bounded(spark):
@@ -209,14 +218,19 @@ def test_observe_metric_is_pushdown_barrier(spark):
 
 
 def test_kv_lookup_prunes_to_its_date_partition(spark, tmp_path):
-    # A serving lookup derives a `date` PartitionFilter from its pk
-    # (operators/serving.py), so the scan opens only that day's files
-    # instead of every day's. inputFiles() lists a path-based
-    # relation's whole file index whatever the filter, so the files
-    # are read from the scan's own RDD partitions.
+    # The Catalyst path of a serving lookup (operators/serving.py
+    # `_key_condition`) derives a `date` PartitionFilter from its pk, so
+    # the scan opens only that day's files instead of every day's.
+    # inputFiles() lists a path-based relation's whole file index
+    # whatever the filter, so the files are read from the scan's own RDD
+    # partitions. The public call on the same bare scan takes the point
+    # path instead: a LocalTableScan over the same rows.
     import os
 
+    from pyspark.sql import functions as F
+
     from music_streaming_data_pipeline_v2_spark.operators.serving import (
+        _key_condition,
         query_pk_prefix,
     )
 
@@ -231,10 +245,12 @@ def test_kv_lookup_prunes_to_its_date_partition(spark, tmp_path):
     ).repartition(2).write.partitionBy("date").parquet(path)
     kv = spark.read.parquet(path)
 
-    q = query_pk_prefix(kv, "GENRE#g1#DATE#2024-06-25", "METRIC#")
-    assert len(q.collect()) == 4
+    pk = "GENRE#g1#DATE#2024-06-25"
+    q = _key_condition(kv, pk, F.col("sk").startswith("METRIC#"))
+    got = q.collect()
+    assert len(got) == 4
+    assert any("date" in f for f in scan_filters(q).partition)
     plan = q._jdf.queryExecution().executedPlan()
-    assert re.search(r"PartitionFilters: \[[^\]]*date", plan.toString())
     leaves = plan.collectLeaves()
     (scan,) = [
         leaf for leaf in (leaves.apply(i) for i in range(leaves.size()))
@@ -251,3 +267,10 @@ def test_kv_lookup_prunes_to_its_date_partition(spark, tmp_path):
     }
     assert read == day_files
     assert scan.metrics().apply("numFiles").value() == len(day_files)
+
+    point = query_pk_prefix(kv, pk, "METRIC#")
+    assert (
+        point._jdf.queryExecution().executedPlan().getClass().getSimpleName()
+        == "LocalTableScanExec"
+    )
+    assert sorted(point.collect()) == sorted(got)

@@ -1,20 +1,27 @@
-"""Date-pruned KV lookups (operators/serving.py).
+"""KV lookups (operators/serving.py): the point path and the Catalyst
+path.
 
-Every lookup adds ``CAST(date AS STRING) = pk_date(pk)`` to its key
-condition. That predicate must be implied by ``pk = :pk``, so each
-pruned lookup has to equal the plain pk/sk filter — on the
-date-partitioned kv written to disk (``date`` reads back as DateType)
-and on the in-memory ``build_kv_table`` relation (``date`` is a string).
+The Catalyst path (``_key_condition``) adds ``CAST(date AS STRING) =
+pk_date(pk)`` to its key condition. That predicate must be implied by
+``pk = :pk``, so each pruned lookup has to equal the plain pk/sk filter —
+on the date-partitioned kv written to disk (``date`` reads back as
+DateType) and on the in-memory ``build_kv_table`` relation (``date`` is a
+string). On the bare date-partitioned parquet scan, a pk that names a day
+takes the point path instead: that day's files read with
+``pyarrow.dataset`` into a LocalRelation, with no Spark job. Both paths
+return what the plain filter returns, with the same schema.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 from collections import Counter
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
+from conftest import scan_filters
 from pyspark.sql import functions as F
 
 from music_streaming_data_pipeline_v2_spark.functions.scalar import (
@@ -23,6 +30,7 @@ from music_streaming_data_pipeline_v2_spark.functions.scalar import (
     pk_date,
 )
 from music_streaming_data_pipeline_v2_spark.operators.serving import (
+    _key_condition,
     query_pk_prefix,
     query_pk_sk,
     query_pk_sk_between,
@@ -63,7 +71,13 @@ def kvs(spark, tmp_path_factory):
     music = run_music_pipeline(streams, songs, users)
     base = str(tmp_path_factory.mktemp("outs"))
     write_music_outputs(music, base)
-    return {"memory": music.kv, "disk": spark.read.parquet(f"{base}/kv")}
+    music.kv.write.parquet(f"{base}/kv_flat")
+    return {
+        "memory": music.kv,
+        "disk": spark.read.parquet(f"{base}/kv"),
+        "disk_path": f"{base}/kv",
+        "flat": spark.read.parquet(f"{base}/kv_flat"),
+    }
 
 
 # (pk, sk prefix, exact sk, sk range, rows expected)
@@ -93,25 +107,129 @@ def _bag(df):
     return Counter(tuple(r) for r in df.collect())
 
 
+def _path(df) -> str:
+    """Which path built a lookup: the point path returns a LocalRelation,
+    the Catalyst path a Filter over ``kv``."""
+    name = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+    return {"LocalRelation": "point", "Filter": "catalyst"}[name]
+
+
+def _shapes(kv, pk, prefix, exact, lo, hi):
+    """(public call, Catalyst path, plain pk/sk filter) per key shape."""
+    on_pk = kv.filter(F.col("pk") == pk)
+    sk = F.col("sk")
+    return [
+        (public, _key_condition(kv, pk, cond), on_pk.filter(cond))
+        for public, cond in (
+            (query_pk_prefix(kv, pk, prefix), sk.startswith(prefix)),
+            (query_pk_sk(kv, pk, exact), sk == exact),
+            (query_pk_sk_between(kv, pk, lo, hi), sk.between(lo, hi)),
+        )
+    ]
+
+
 @pytest.mark.parametrize("relation", ["disk", "memory"])
 @pytest.mark.parametrize("case", sorted(_CASES))
 def test_pruned_lookup_equals_plain_filter(kvs, relation, case):
     kv = kvs[relation]
     pk, prefix, exact, (lo, hi), hits = _CASES[case]
-    on_pk = kv.filter(F.col("pk") == pk)
-    shapes = [
-        (query_pk_prefix(kv, pk, prefix), on_pk.filter(F.col("sk").startswith(prefix))),
-        (query_pk_sk(kv, pk, exact), on_pk.filter(F.col("sk") == exact)),
-        (query_pk_sk_between(kv, pk, lo, hi), on_pk.filter(F.col("sk").between(lo, hi))),
-    ]
-    for pruned, plain in shapes:
-        got = _bag(pruned)
-        assert got == _bag(plain)
+    point_path = relation == "disk" and pk_date(pk) is not None
+    for public, pruned, plain in _shapes(kv, pk, prefix, exact, lo, hi):
+        got = _bag(public)
+        assert got == _bag(pruned) == _bag(plain)
+        assert public.schema == pruned.schema == plain.schema == kv.schema
         assert bool(got) == hits
+        assert _path(public) == ("point" if point_path else "catalyst")
         if relation == "disk":
-            plan = pruned._jdf.queryExecution().executedPlan().toString()
-            date_filtered = "PartitionFilters: []" not in plan
+            date_filtered = any("date" in f for f in scan_filters(pruned).partition)
             assert date_filtered == (pk_date(pk) is not None)
+            plan = public._jdf.queryExecution().executedPlan()
+            is_local = plan.getClass().getSimpleName() == "LocalTableScanExec"
+            assert is_local == point_path
+
+
+def test_point_lookup_reads_past_zero_row_batches(spark, tmp_path):
+    """A day written as several files where the pk's rows sit only in
+    the last row group of one file: the Arrow scan yields zero-row
+    batches before them, and createDataFrame(pa.Table) stops at the first
+    zero-row batch after the first batch. The row groups before the key's
+    span it in their pk statistics, so none is skipped, and the file
+    yields those empty batches whatever order the listing gives."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    day = tmp_path / "kv" / "date=2024-06-25"
+    day.mkdir(parents=True)
+    for i, genres in enumerate([["a", "e"], ["b", "d"], ["a", "e", "a", "e", "c"]]):
+        pks = [f"GENRE#{g}#DATE#2024-06-25" for g in genres for _ in range(3)]
+        pq.write_table(
+            pa.table({"pk": pks, "sk": [f"SONG#{n % 3}" for n in range(len(pks))],
+                      "value": [str(n) for n in range(len(pks))]}),
+            day / f"part-{i}.parquet",
+            row_group_size=6,
+        )
+    kv = spark.read.parquet(str(tmp_path / "kv"))
+    pk = "GENRE#c#DATE#2024-06-25"
+    for public, _, plain in _shapes(kv, pk, "SONG#", "SONG#2", "SONG#1", "SONG#2"):
+        assert _path(public) == "point"
+        assert _bag(public) == _bag(plain)
+        assert public.count() > 0
+
+
+def test_point_lookup_runs_no_spark_job(spark, kvs):
+    # a fresh read, so the file listing of the first lookup is counted too
+    kv = spark.read.parquet(kvs["disk_path"])
+    sc = spark.sparkContext
+    group = "serving-point-lookup"
+    sc.setJobGroup(group, "point lookups")
+    try:
+        for case in ("genre_day", "genre_with_hash", "date_only", "absent_day"):
+            pk, prefix, exact, (lo, hi), _ = _CASES[case]
+            for public, _, _ in _shapes(kv, pk, prefix, exact, lo, hi):
+                public.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize(
+    "relation", ["memory", "select_star", "filtered", "flat", "no_day"]
+)
+def test_fallback_keeps_the_catalyst_path(kvs, relation):
+    pk, prefix, exact, (lo, hi), _ = _CASES["genre_day"]
+    kv = {
+        "memory": kvs["memory"],
+        "select_star": kvs["disk"].select("*"),
+        "filtered": kvs["disk"].filter(F.col("sk").isNotNull()),
+        "flat": kvs["flat"],
+        "no_day": kvs["disk"],
+    }[relation]
+    if relation == "no_day":
+        pk = "GENRE#rock"
+    for public, pruned, plain in _shapes(kv, pk, prefix, exact, lo, hi):
+        assert _path(public) == "catalyst"
+        assert _bag(public) == _bag(pruned) == _bag(plain)
+
+
+def test_noncanonical_day_directory_keeps_the_catalyst_path(spark, tmp_path):
+    """Read as DateType, ``date=2024-6-25`` holds the day 2024-06-25, whose
+    ``CAST(date AS STRING)`` is not the directory name: keying files by
+    directory would miss its rows, so the relation stays on Catalyst."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for d in ("2024-6-25", "2024-06-26"):
+        (tmp_path / f"date={d}").mkdir()
+        pq.write_table(
+            pa.table({"pk": ["DATE#2024-06-25", "DATE#2024-06-26"], "sk": ["A", "B"]}),
+            tmp_path / f"date={d}" / "part-0.parquet",
+        )
+    kv = spark.read.schema("pk string, sk string, date date").parquet(str(tmp_path))
+    got = query_pk_sk_between(kv, "DATE#2024-06-25", "A", "Z")
+    assert _path(got) == "catalyst"
+    assert [tuple(r) for r in got.collect()] == [
+        ("DATE#2024-06-25", "A", dt.date(2024, 6, 25))
+    ]
 
 
 def test_pk_date_parses_fields():

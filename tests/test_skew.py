@@ -4,6 +4,7 @@ bucketed joins run shuffle-free."""
 from __future__ import annotations
 
 import pytest
+from conftest import scan_filters
 from pyspark.sql import functions as F
 
 from music_streaming_data_pipeline_v2_spark.operators.skew import (
@@ -113,8 +114,7 @@ def test_date_partition_pruning(spark, tmp_path):
     df.write.mode("overwrite").partitionBy("date").parquet(path)
 
     q = spark.read.parquet(path).filter(F.col("date") == "2024-01-03")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "2024-01-03" in plan
+    assert any("2024-01-03" in f for f in scan_filters(q).partition)
     # only one of the ten date partitions is actually scanned
     assert q.select(F.input_file_name()).distinct().count() >= 1
     files = {r[0] for r in q.select(F.input_file_name()).distinct().collect()}
