@@ -2511,7 +2511,7 @@ def music_pipeline_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .music import run_music_pipeline
 
     streams, songs, users = _music_tables(spark, sf_dir)
-    out = run_music_pipeline(streams, songs, users, cache_enriched=False)
+    out = run_music_pipeline(streams, songs, users)
     return out.genre_kpis
 
 
@@ -2540,7 +2540,7 @@ def music_pipeline_top_songs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .music import run_music_pipeline
 
     streams, songs, users = _music_tables(spark, sf_dir)
-    out = run_music_pipeline(streams, songs, users, cache_enriched=False)
+    out = run_music_pipeline(streams, songs, users)
     return out.top_songs
 
 

@@ -8,8 +8,12 @@ formats, idempotent date recompute.
 
 from __future__ import annotations
 
+import glob
+import os
 import re
+from collections import Counter
 
+import pyarrow.parquet as pq
 import pytest
 from conftest import scan_filters
 from pyspark.sql import Row
@@ -20,7 +24,10 @@ from music_streaming_data_pipeline_v2_spark.operators.serving import (
     query_pk_sk,
     query_pk_sk_between,
 )
-from music_streaming_data_pipeline_v2_spark.plans.music import run_music_pipeline
+from music_streaming_data_pipeline_v2_spark.plans.music import (
+    run_music_pipeline,
+    write_music_outputs,
+)
 
 
 @pytest.fixture(scope="module")
@@ -141,8 +148,6 @@ def test_kv_serving_pushdown_on_parquet(spark, music, tmp_path):
 
 
 def test_write_music_outputs_one_pass(spark, music, tmp_path):
-    from music_streaming_data_pipeline_v2_spark.plans.music import write_music_outputs
-
     base = str(tmp_path / "outs")
     write_music_outputs(music, base)
     kpis = spark.read.parquet(f"{base}/genre_kpis")
@@ -150,7 +155,144 @@ def test_write_music_outputs_one_pass(spark, music, tmp_path):
     assert kpis.count() == music.genre_kpis.count()
     assert kv.count() == music.kv.count()
     # date-partitioned layout on disk
-    import os
-
     assert any(d.startswith("date=") for d in os.listdir(f"{base}/genre_kpis"))
     assert any(d.startswith("date=") for d in os.listdir(f"{base}/kv"))
+    # each kv file is sorted by (pk, sk)
+    files = glob.glob(f"{base}/kv/date=*/*.parquet")
+    assert files
+    for f in files:
+        keys = [(r["pk"], r["sk"]) for r in pq.read_table(f, columns=["pk", "sk"]).to_pylist()]
+        assert keys == sorted(keys), f
+
+
+def _tie_tables(spark):
+    """Seven genres of four tracks, every track played twice a day on two
+    days: the top-5 genres of a day and the top-3 songs of a genre-day
+    are decided by the ``track_genre`` and ``track_id`` tie-breaks. One
+    more play has no time."""
+    songs = spark.createDataFrame(
+        [
+            Row(track_id=f"t{g}{j}", track_name=f"name{g}{j}", album_name="al",
+                artists=f"artist{j}", duration_ms=100000 + 1000 * j,
+                track_genre=f"g{g}")
+            for g in range(7) for j in range(4)
+        ]
+    )
+    users = spark.createDataFrame(
+        [Row(user_id=str(u), user_name=f"u{u}", user_age=20 + u, user_country="US")
+         for u in range(3)]
+    )
+    streams = spark.createDataFrame(
+        [
+            Row(user_id=str((g + j + n) % 3), track_id=f"t{g}{j}",
+                listen_time=f"2024-06-{25 + d:02d} 1{n}:{g * 4 + j:02d}:00")
+            for g in range(7) for j in range(4) for d in range(2) for n in range(2)
+        ]
+        # a play with no time forms a null-date group in every output
+        + [Row(user_id="0", track_id="t00", listen_time=None)]
+    ).withColumn("listen_time", F.to_timestamp("listen_time"))
+    return streams, songs, users
+
+
+@pytest.fixture(scope="module")
+def music_ties(spark):
+    return run_music_pipeline(*_tie_tables(spark))
+
+
+def _bag_and_types(df, columns, as_types):
+    """The rows of ``df`` over ``columns`` as a multiset, with each
+    column cast to the type in ``as_types`` when given, plus its types."""
+    df = df.select(*[F.col(c).cast(as_types[c]) if c in as_types else c for c in columns])
+    return Counter(tuple(r) for r in df.collect()), [f.dataType for f in df.schema]
+
+
+@pytest.mark.parametrize("partition_by_date", [True, False])
+@pytest.mark.parametrize("fixture", ["music", "music_ties"])
+def test_written_tables_equal_in_memory(spark, request, tmp_path, fixture, partition_by_date):
+    """Each table on disk equals its in-memory relation as a multiset,
+    with the same column types: ``top_genres`` and ``kv`` are derived
+    from the committed outputs, and both top-K tie-breaks run on the
+    values read back."""
+    music = request.getfixturevalue(fixture)
+    base = str(tmp_path / "outs")
+    write_music_outputs(music, base, partition_by_date=partition_by_date)
+    for name in ("genre_kpis", "top_songs", "top_genres", "kv"):
+        mem = getattr(music, name)
+        disk = spark.read.parquet(f"{base}/{name}")
+        # a partition column's type is inferred from its directory names
+        # (a kv ``date`` string reads back as a date); its values are
+        # compared in the in-memory type
+        as_types = {"date": mem.schema["date"].dataType} if partition_by_date else {}
+        got, got_types = _bag_and_types(disk, mem.columns, as_types)
+        want, want_types = _bag_and_types(mem, mem.columns, {})
+        assert got_types == want_types, name
+        assert got == want, name
+        assert sum(want.values()) > 0, name
+    if fixture == "music_ties":
+        # the ties reach the cut: 7 tied genres a day, 4 tied songs a genre-day
+        ranked = spark.read.parquet(f"{base}/top_genres").where("rank = 5").collect()
+        assert sorted(r.track_genre for r in ranked) == ["g4", "g4"]
+        songs = spark.read.parquet(f"{base}/top_songs").where("rank = 3")
+        assert {r.track_id[-1] for r in songs.collect()} == {"2"}
+
+
+def _day_files(root):
+    """``{day: {file name: mtime_ns}}`` of a date-partitioned table."""
+    return {
+        d: {f: os.stat(os.path.join(root, d, f)).st_mtime_ns
+            for f in os.listdir(os.path.join(root, d))}
+        for d in os.listdir(root) if d.startswith("date=")
+    }
+
+
+def test_one_day_rewrite_replaces_only_that_day(spark, tmp_path):
+    """A one-day backfill into a directory that holds three days reads
+    back and rewrites only that day's ``top_genres`` and ``kv``
+    partitions, and leaves no cached relation behind."""
+    songs = spark.createDataFrame(
+        [Row(track_id=f"t{i}", track_name=f"name{i}", album_name="al",
+             artists=f"artist{i}", duration_ms=100000 + i * 1000,
+             track_genre=f"g{i % 3}") for i in range(9)]
+    )
+    users = spark.createDataFrame(
+        [Row(user_id=str(u), user_name=f"u{u}", user_age=20 + u, user_country="US")
+         for u in range(4)]
+    )
+
+    def streams(n_per_day):
+        return spark.createDataFrame(
+            [Row(user_id=str(i % 4), track_id=f"t{(i * 7 + d) % 9}",
+                 listen_time=f"2024-06-{24 + d:02d} 10:{i % 60:02d}:00")
+             for d, n in enumerate(n_per_day) for i in range(n)]
+        ).withColumn("listen_time", F.to_timestamp("listen_time"))
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    base = str(tmp_path / "outs")
+    write_music_outputs(run_music_pipeline(streams([40, 50, 60]), songs, users), base)
+    before = {t: _day_files(f"{base}/{t}") for t in ("top_genres", "kv")}
+    assert all(len(days) == 3 for days in before.values())
+
+    # the recompute sees fewer plays on 06-25, so its rows change
+    day = "2024-06-25"
+    redo = run_music_pipeline(streams([40, 20, 60]), songs, users, process_date=day)
+    write_music_outputs(redo, base)
+    assert cache.isEmpty()
+
+    for t in ("top_genres", "kv"):
+        after = _day_files(f"{base}/{t}")
+        assert after.keys() == before[t].keys()
+        for d in after:
+            if d == f"date={day}":
+                assert not set(after[d]) & set(before[t][d]), (t, d)
+            else:
+                assert after[d] == before[t][d], (t, d)
+    got, got_types = _bag_and_types(
+        spark.read.parquet(f"{base}/kv").where(F.col("date") == day),
+        redo.kv.columns, {"date": "string"},
+    )
+    want, want_types = _bag_and_types(redo.kv, redo.kv.columns, {})
+    assert got_types == want_types
+    assert got == want
+    plays = spark.read.parquet(f"{base}/genre_kpis").where(F.col("date") == day)
+    assert plays.agg(F.sum("listen_count")).first()[0] == 20
