@@ -27,10 +27,12 @@ def write_partitioned(
     With ``spark.sql.sources.partitionOverwriteMode=dynamic`` (set by the
     session factory) an overwrite touches only the partitions present in
     ``df`` — re-running one day replaces one day, not the table.
-    ``options`` are per-write DataFrameWriter options — the streaming
-    pipeline passes ``partitionOverwriteMode`` HERE rather than mutating
-    the session conf (a conf mutation would silently change overwrite
-    semantics for every later write in the caller's session).
+    ``options`` are per-write DataFrameWriter options — the music
+    outputs and the streaming pipeline pass ``partitionOverwriteMode``
+    HERE (plans/music.py ``DYNAMIC``) rather than relying on or mutating
+    the session conf: under Spark's default (static) a one-day overwrite
+    truncates every other day, and a conf mutation would silently change
+    overwrite semantics for every later write in the caller's session.
     """
     writer = df.write.mode(mode).format(fmt)
     for k, v in (options or {}).items():

@@ -19,14 +19,14 @@ Spark-first decisions:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 def daily_genre_kpis(
     enriched: DataFrame,
     group_col: str = "track_genre",
-    date_col: str = "date",
+    date_col: str | Column = "date",
     user_col: str = "user_id",
     measure_col: str = "duration_ms",
     approx_distinct: bool = False,
@@ -36,6 +36,7 @@ def daily_genre_kpis(
 
     Output schema matches schemas.GENRE_KPIS (with generic names mapped
     back to the reference's when called on the music schema).
+    ``date_col`` may be a Column, such as a streaming event-time window.
     """
     distinct = (
         F.approx_count_distinct(user_col, approx_rsd)

@@ -24,8 +24,10 @@ key conditions is answered by one of two paths, and the shape of the
   lookup opens one day's files instead of every day's.
 
 Layout: the kv table is written partitioned by ``date`` and sorted by
-(pk, sk) within files (plans/music.py ``write_music_outputs``,
-streaming/pipeline.py). A pk names its day (``GENRE#g#DATE#d``,
+(pk, sk) within files. One function builds and sorts its rows,
+plans/music.py ``kv_rows``, and both writers write its output: the
+backfill (``write_music_outputs``) and the KPI drain
+(streaming/pipeline.py). A pk names its day (``GENRE#g#DATE#d``,
 ``DATE#d``).
 
 Invariant that makes both paths equal to the plain pk/sk filter: every

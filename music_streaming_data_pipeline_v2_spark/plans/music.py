@@ -7,8 +7,8 @@ three KPI pipelines → save) with the anti-patterns removed:
 - no diagnostic ``count()`` actions — the reference burns seven
   (music-streaming-transform.py:43-51, 87, 108, 132, 156). The outputs
   are lazy plans; nothing runs until an action.
-- no ``coalesce(1)`` writes — outputs keep natural partitioning or are
-  partitioned by date (io/sinks.py).
+- no ``coalesce(1)`` writes — outputs are partitioned by date
+  (io/sinks.py).
 - deterministic top-K ordering — ``row_number`` tie-broken by item key
   (operators/topk.py), where the reference's ties are arbitrary.
 
@@ -20,6 +20,13 @@ transform's parquet outputs (SURVEY.md §3.3,
 dynamodb-ingestion.py:24-44, 169-191). With two consumers of the
 enrichment left, caching it costs more than the second scan+join it
 would save, so nothing is cached.
+
+The steps are shared with the KPI drain (streaming/pipeline.py), whose
+recompute of its touched days is this job over the validated store,
+as the reference's ``PROCESS_DATE`` run is its full run restricted to
+one day (music-streaming-transform.py:82-85): ``daily_genre_kpis``,
+``rank_songs``, ``rank_genres``, ``kv_rows``, and ``write_days`` /
+``read_days`` to replace days and read back what was committed.
 """
 
 from __future__ import annotations
@@ -27,14 +34,20 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..operators.aggregates import daily_genre_kpis, plays_per_item
 from ..io.sinks import write_partitioned, write_partitioned_audited
+from ..operators.aggregates import daily_genre_kpis, plays_per_item
 from ..operators.enrich import enrich_streams
 from ..operators.reshape import build_kv_table
 from ..operators.topk import top_k_per_group
+
+# Every music output is partitioned by date and replaced a day at a
+# time. The mode rides each writer, not the session conf: under Spark's
+# default (static) an overwrite of one day would truncate every other.
+DYNAMIC = {"partitionOverwriteMode": "dynamic"}
 
 
 @dataclass
@@ -44,6 +57,22 @@ class MusicKpiOutputs:
     top_songs: DataFrame
     top_genres: DataFrame
     kv: DataFrame
+
+
+def rank_songs(enriched: DataFrame) -> DataFrame:
+    """Top-3 songs per genre and date by plays (reference A3/W1)."""
+    song_counts = plays_per_item(
+        enriched, ["track_genre", "date", "track_id", "track_name", "artists"]
+    )
+    return top_k_per_group(
+        song_counts,
+        partition_cols=["track_genre", "date"],
+        order_col="play_count",
+        k=3,
+        tie_break_cols=["track_id"],
+    ).select(
+        "track_genre", "date", "rank", "track_id", "track_name", "artists", "play_count"
+    )
 
 
 def rank_genres(genre_kpis: DataFrame) -> DataFrame:
@@ -65,6 +94,18 @@ def rank_genres(genre_kpis: DataFrame) -> DataFrame:
     ).select("date", "rank", "track_genre", "total_plays")
 
 
+def kv_rows(genre_kpis: DataFrame, top_songs: DataFrame) -> DataFrame:
+    """The KV serving rows of ``genre_kpis`` and ``top_songs``, with the
+    genre ranks taken from ``genre_kpis``, sorted by (date, pk, sk)
+    within partitions so serving predicates skip row groups. The sort
+    leads with the partition column: a date-partitioned write sorts its
+    rows by ``date`` unless they already are, and that sort would
+    replace a (pk, sk) one."""
+    return build_kv_table(
+        genre_kpis, top_songs, rank_genres(genre_kpis)
+    ).sortWithinPartitions("date", "pk", "sk")
+
+
 def run_music_pipeline(
     streams: DataFrame,
     songs: DataFrame,
@@ -75,75 +116,84 @@ def run_music_pipeline(
     """Build the full KPI plan; nothing is executed until an action."""
     enriched = enrich_streams(streams, songs, users, process_date=process_date)
     genre_kpis = daily_genre_kpis(enriched, approx_distinct=approx_distinct)
-
-    song_counts = plays_per_item(
-        enriched, ["track_genre", "date", "track_id", "track_name", "artists"]
-    )
-    top_songs = top_k_per_group(
-        song_counts,
-        partition_cols=["track_genre", "date"],
-        order_col="play_count",
-        k=3,
-        tie_break_cols=["track_id"],
-    ).select(
-        "track_genre", "date", "rank", "track_id", "track_name", "artists", "play_count"
+    top_songs = rank_songs(enriched)
+    return MusicKpiOutputs(
+        enriched,
+        genre_kpis,
+        top_songs,
+        rank_genres(genre_kpis),
+        kv_rows(genre_kpis, top_songs),
     )
 
-    top_genres = rank_genres(genre_kpis)
-    kv = build_kv_table(genre_kpis, top_songs, top_genres)
-    return MusicKpiOutputs(enriched, genre_kpis, top_songs, top_genres, kv)
+
+def write_days(
+    df: DataFrame, path: str, null_check_cols: list[str] | None = None
+) -> dict:
+    """Replace the ``date`` partitions of ``path`` that ``df`` has rows
+    for, and return the write's audit manifest
+    (``io/sinks.write_partitioned_audited``). The manifest names the
+    days written, observed on the write's own pass: ``dates_written``,
+    plus ``null_date`` > 0 when a null-date group was written."""
+    return write_partitioned_audited(
+        df,
+        path,
+        ["date"],
+        options=DYNAMIC,
+        null_check_cols=[*(null_check_cols or []), "date"],
+        extra_metrics={"dates_written": F.collect_set("date")},
+    )
 
 
-def write_music_outputs(
-    outputs: MusicKpiOutputs, base_dir: str, partition_by_date: bool = True
-) -> None:
+def read_days(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType,
+    dates: list,
+    null_date: bool = False,
+) -> DataFrame:
+    """The committed rows of ``dates`` (and of the null date when
+    ``null_date``) under the date-partitioned ``path``. The explicit
+    ``schema`` spares the job that opens a footer to infer one, and
+    keeps a ``date`` written as a string a string. A partition filter
+    prunes the listing however many days it names: Spark plans an
+    ``isin`` of more than 10 literals as ``INSET``."""
+    days = F.col("date").isin(list(dates))
+    if null_date:
+        days = days | F.col("date").isNull()
+    return spark.read.schema(schema).parquet(path).where(days)
+
+
+def write_music_outputs(outputs: MusicKpiOutputs, base_dir: str) -> None:
     """Write the four result tables under ``base_dir``, in this order:
 
     1. ``genre_kpis`` from the history lineage; the dates it wrote are
-       collected on the write's own pass (``observe``).
+       collected on the write's own pass (``write_days``).
     2. ``top_songs`` from the history lineage.
     3. ``top_genres``, ranked from the committed ``genre_kpis`` of those
        dates.
-    4. ``kv``, built from the committed ``genre_kpis``, ``top_songs`` and
-       ``top_genres`` of those dates and sorted by (pk, sk) within files
-       so serving predicates skip row groups. The sort leads with the
-       partition column: a partitioned write sorts its rows by ``date``
-       unless they already are, and that sort would replace a
-       (pk, sk) one.
+    4. ``kv`` (``kv_rows``), built from the committed ``genre_kpis`` and
+       ``top_songs`` of those dates.
 
     Derived tables read back exactly the dates step 1 wrote, so a
     one-day recompute into an existing ``base_dir`` reads and replaces
-    one day: date-partitioned outputs are dynamic partition overwrites.
-    Each read back uses the output's own schema, so no parquet footer
-    is opened to infer it. The reference recomputes everything per
-    output (music-streaming-transform.py:162-185).
+    one day, whatever the session's ``partitionOverwriteMode``. The
+    reference recomputes everything per output
+    (music-streaming-transform.py:162-185).
     """
     spark = outputs.genre_kpis.sparkSession
-    part = ["date"] if partition_by_date else None
     paths = {
         name: os.path.join(base_dir, name)
         for name in ("genre_kpis", "top_songs", "top_genres", "kv")
     }
-    audit = write_partitioned_audited(
-        outputs.genre_kpis,
-        paths["genre_kpis"],
-        part,
-        null_check_cols=["date"],
-        extra_metrics={"dates_written": F.collect_set("date")},
-    )
-    written = F.col("date").isin(audit["dates_written"])
-    if audit["null_date"]:  # a null listen_time makes a null-date group
-        written = written | F.col("date").isNull()
-    write_partitioned(outputs.top_songs, paths["top_songs"], part)
+    audit = write_days(outputs.genre_kpis, paths["genre_kpis"])
+    write_partitioned(outputs.top_songs, paths["top_songs"], ["date"], options=DYNAMIC)
 
     def committed(name: str, df: DataFrame) -> DataFrame:
-        return spark.read.schema(df.schema).parquet(paths[name]).where(written)
+        return read_days(
+            spark, paths[name], df.schema, audit["dates_written"], audit["null_date"]
+        )
 
     genre_kpis = committed("genre_kpis", outputs.genre_kpis)
-    write_partitioned(rank_genres(genre_kpis), paths["top_genres"], part)
-    kv = build_kv_table(
-        genre_kpis,
-        committed("top_songs", outputs.top_songs),
-        committed("top_genres", outputs.top_genres),
-    ).sortWithinPartitions(*(part or []), "pk", "sk")
-    write_partitioned(kv, paths["kv"], part)
+    write_partitioned(rank_genres(genre_kpis), paths["top_genres"], ["date"], options=DYNAMIC)
+    kv = kv_rows(genre_kpis, committed("top_songs", outputs.top_songs))
+    write_partitioned(kv, paths["kv"], ["date"], options=DYNAMIC)

@@ -206,23 +206,22 @@ def _bag_and_types(df, columns, as_types):
     return Counter(tuple(r) for r in df.collect()), [f.dataType for f in df.schema]
 
 
-@pytest.mark.parametrize("partition_by_date", [True, False])
 @pytest.mark.parametrize("fixture", ["music", "music_ties"])
-def test_written_tables_equal_in_memory(spark, request, tmp_path, fixture, partition_by_date):
+def test_written_tables_equal_in_memory(spark, request, tmp_path, fixture):
     """Each table on disk equals its in-memory relation as a multiset,
     with the same column types: ``top_genres`` and ``kv`` are derived
     from the committed outputs, and both top-K tie-breaks run on the
     values read back."""
     music = request.getfixturevalue(fixture)
     base = str(tmp_path / "outs")
-    write_music_outputs(music, base, partition_by_date=partition_by_date)
+    write_music_outputs(music, base)
     for name in ("genre_kpis", "top_songs", "top_genres", "kv"):
         mem = getattr(music, name)
         disk = spark.read.parquet(f"{base}/{name}")
         # a partition column's type is inferred from its directory names
         # (a kv ``date`` string reads back as a date); its values are
         # compared in the in-memory type
-        as_types = {"date": mem.schema["date"].dataType} if partition_by_date else {}
+        as_types = {"date": mem.schema["date"].dataType}
         got, got_types = _bag_and_types(disk, mem.columns, as_types)
         want, want_types = _bag_and_types(mem, mem.columns, {})
         assert got_types == want_types, name
@@ -245,10 +244,10 @@ def _day_files(root):
     }
 
 
-def test_one_day_rewrite_replaces_only_that_day(spark, tmp_path):
-    """A one-day backfill into a directory that holds three days reads
-    back and rewrites only that day's ``top_genres`` and ``kv``
-    partitions, and leaves no cached relation behind."""
+def _one_day_rewrite(spark, tmp_path):
+    """A 3-day backfill, then a 1-day backfill with changed plays on the
+    middle day into the same directory; checks that only that day's
+    files changed in each of the four tables."""
     songs = spark.createDataFrame(
         [Row(track_id=f"t{i}", track_name=f"name{i}", album_name="al",
              artists=f"artist{i}", duration_ms=100000 + i * 1000,
@@ -270,7 +269,8 @@ def test_one_day_rewrite_replaces_only_that_day(spark, tmp_path):
     spark.catalog.clearCache()
     base = str(tmp_path / "outs")
     write_music_outputs(run_music_pipeline(streams([40, 50, 60]), songs, users), base)
-    before = {t: _day_files(f"{base}/{t}") for t in ("top_genres", "kv")}
+    tables = ("genre_kpis", "top_songs", "top_genres", "kv")
+    before = {t: _day_files(f"{base}/{t}") for t in tables}
     assert all(len(days) == 3 for days in before.values())
 
     # the recompute sees fewer plays on 06-25, so its rows change
@@ -279,7 +279,7 @@ def test_one_day_rewrite_replaces_only_that_day(spark, tmp_path):
     write_music_outputs(redo, base)
     assert cache.isEmpty()
 
-    for t in ("top_genres", "kv"):
+    for t in tables:
         after = _day_files(f"{base}/{t}")
         assert after.keys() == before[t].keys()
         for d in after:
@@ -296,3 +296,24 @@ def test_one_day_rewrite_replaces_only_that_day(spark, tmp_path):
     assert got == want
     plays = spark.read.parquet(f"{base}/genre_kpis").where(F.col("date") == day)
     assert plays.agg(F.sum("listen_count")).first()[0] == 20
+
+
+def test_one_day_rewrite_replaces_only_that_day(spark, tmp_path):
+    """A one-day backfill into a directory that holds three days reads
+    back and rewrites only that day's partitions of each table, and
+    leaves no cached relation behind."""
+    _one_day_rewrite(spark, tmp_path)
+
+
+def test_one_day_rewrite_under_static_overwrite_conf(spark, tmp_path):
+    """The same one-day rewrite in a session left at Spark's default
+    ``partitionOverwriteMode`` (static), under which a plain overwrite
+    of one day would truncate every other day: each music write sets
+    the dynamic mode itself."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        _one_day_rewrite(spark, tmp_path)
+    finally:
+        spark.conf.set(key, old)

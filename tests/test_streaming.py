@@ -98,16 +98,16 @@ def test_incremental_exactly_once_and_recompute(spark, dims, tmp_path):
     assert spark.read.parquet(str(quar)).count() == 1
 
 
-def test_backfill_many_dates_uses_join_path(spark, dims, tmp_path):
-    """A backfill batch touching more dates than max_isin_dates must
-    recompute through the semi-join path, with identical results."""
+def test_backfill_many_dates_recomputes_every_day(spark, dims, tmp_path):
+    """A backfill batch touching many dates recomputes every one of
+    them, with the plays of each day counted once."""
     songs, users = dims
     inp = tmp_path / "in"
     out = tmp_path / "out"
     ckpt = tmp_path / "ckpt"
     inp.mkdir()
 
-    # one batch spanning 8 distinct days, cap forced down to 3
+    # one batch spanning 8 distinct days
     rows = [
         f"{u % 3},t{u % 4},2024-06-{10 + d:02d} 1{u}:00:00"
         for d in range(8)
@@ -117,7 +117,6 @@ def test_backfill_many_dates_uses_join_path(spark, dims, tmp_path):
     run_incremental_pipeline(
         spark, str(inp), songs, users,
         output_dir=str(out), checkpoint_dir=str(ckpt),
-        max_isin_dates=3,
     )
     kpis = spark.read.parquet(str(out / "genre_kpis"))
     dates = {str(r.date) for r in kpis.select("date").distinct().collect()}
@@ -125,6 +124,40 @@ def test_backfill_many_dates_uses_join_path(spark, dims, tmp_path):
     # per-day counts correct: 2 plays/day split by genre parity of t
     total = kpis.agg(F.sum("listen_count")).first()[0]
     assert total == 16
+
+
+def test_many_day_read_back_is_a_partition_filter(spark, dims, tmp_path):
+    """The drain reads its touched days back from the validated store
+    with an ``isin`` of dates. Spark plans more than 10 literals as
+    ``INSET``, which is still a partition filter, so a batch spanning
+    more than 100 days prunes the store to those days."""
+    import datetime as dt
+
+    from conftest import scan_filters
+
+    from music_streaming_data_pipeline_v2_spark.plans.music import read_days
+
+    songs, users = dims
+    inp = tmp_path / "in"
+    out = tmp_path / "out"
+    inp.mkdir()
+    _write_stream_csv(
+        str(inp / "stream1.csv"),
+        ["0,t0,2024-01-05 10:00:00", "1,t1,2024-02-10 10:00:00",
+         "2,t2,2024-09-01 10:00:00"],
+    )
+    run_incremental_pipeline(
+        spark, str(inp), songs, users,
+        output_dir=str(out), checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    validated = str(out / "validated")
+    days = [dt.date(2024, 1, 1) + dt.timedelta(days=n) for n in range(120)]
+    q = read_days(spark, validated, spark.read.parquet(validated).schema, days)
+    filters = scan_filters(q)
+    assert any("INSET" in f and "date" in f for f in filters.partition), filters
+    assert not any("date" in f for f in filters.data), filters
+    # 2024-09-01 lies outside the 120 days
+    assert sorted(r.track_id for r in q.collect()) == ["t0", "t1"]
 
 
 def test_streaming_daily_kpis_window(spark, dims, tmp_path):
@@ -676,8 +709,10 @@ def test_incremental_kpis_equal_batch_over_waves(spark, tmp_path):
     the sf0.001 music-shaped stream through the incremental pipeline in
     3 hash waves must leave genre_kpis identical — row for row, value
     for value — to one batch aggregation over the same validated
-    input. Proves the recompute-a-day path converges to batch truth
-    regardless of how arrivals were partitioned."""
+    input, and its kv equal, as a multiset, to the backfill's kv over
+    the validated rows, each kv file in (pk, sk) order. Proves the
+    recompute-a-day path converges to batch truth regardless of how
+    arrivals were partitioned."""
     import glob
     import shutil
 
@@ -708,6 +743,7 @@ def test_incremental_kpis_equal_batch_over_waves(spark, tmp_path):
             spark, str(inp), songs, users,
             output_dir=str(tmp_path / "out"),
             checkpoint_dir=str(tmp_path / "ckpt"),
+            maintain_kv=True,
         )
 
     got = {
@@ -741,6 +777,31 @@ def test_incremental_kpis_equal_batch_over_waves(spark, tmp_path):
         for r in expected_df.collect()
     }
     assert got == expected
+
+    # the drain's kv is the backfill's kv over the validated rows
+    import pyarrow.parquet as pq
+    from collections import Counter
+
+    from music_streaming_data_pipeline_v2_spark.plans.music import run_music_pipeline
+
+    validated = spark.read.parquet(str(tmp_path / "out" / "validated")).select(
+        "user_id", "track_id", "listen_time"
+    )
+    want_kv = run_music_pipeline(validated, songs, users).kv
+    drained_kv = spark.read.parquet(str(tmp_path / "out" / "kv"))
+
+    def bag(df):
+        df = df.select(*want_kv.columns).withColumn("date", F.col("date").cast("string"))
+        return Counter(tuple(r) for r in df.collect())
+
+    want = bag(want_kv)
+    assert sum(want.values()) > 0
+    assert bag(drained_kv) == want
+    files = glob.glob(str(tmp_path / "out" / "kv" / "date=*" / "*.parquet"))
+    assert files
+    for f in files:
+        keys = [(r["pk"], r["sk"]) for r in pq.read_table(f, columns=["pk", "sk"]).to_pylist()]
+        assert keys == sorted(keys), f
 
 
 def test_incremental_dedup_rejects_incompatible_state(spark, tmp_path):
